@@ -99,6 +99,9 @@ def main() -> None:
         "bench", extra_conf={"spark.ui.showConsoleProgress": "false"}
     )
     spark.sparkContext.setLogLevel("ERROR")
+    # the parallelism the numbers were measured under
+    master = spark.sparkContext.master
+    default_parallelism = spark.sparkContext.defaultParallelism
 
     # FIXED warmup set (VERDICT r4 ask #4): one query per major plan
     # shape (scan-agg, broadcast-join chain, window, text shuffle,
@@ -336,6 +339,8 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "sf": sf,
+        "master": master,
+        "default_parallelism": default_parallelism,
         "queries": per_query,
         "etl_records_per_sec": etl_rec_s,
         "baseline_etl_records_per_sec": 0.153,
@@ -368,6 +373,8 @@ def main() -> None:
                 "value": total,
                 "unit": "sec",
                 "sf": sf,
+                "master": master,
+                "default_parallelism": default_parallelism,
                 "n_queries": len(per_query),
                 "etl_records_per_sec": etl_rec_s,
                 "baseline_etl_records_per_sec": 0.153,

@@ -27,13 +27,14 @@ def top_email_domains(profiles: DataFrame, k: int = 5) -> DataFrame:
     Domain extraction is a JVM regex, not per-row Python. orderBy +
     limit compiles to TakeOrderedAndProject: each partition keeps a
     k-row heap, the driver merges heaps — no global sort at any scale.
-    Count-desc then domain-asc makes rank-k ties deterministic.
+    Count-desc then domain-asc (NULLs last, the SQL default) makes
+    rank-k ties deterministic.
     """
     return (
         profiles.select(email_domain(F.col("email")).alias("domain"))
         .groupBy("domain")
         .agg(F.count(F.lit(1)).alias("count"))
-        .orderBy(F.desc("count"), F.asc("domain"))
+        .orderBy(F.desc("count"), F.asc_nulls_last("domain"))
         .limit(k)
     )
 
@@ -46,13 +47,34 @@ def total_users(profiles: DataFrame) -> DataFrame:
 def age_ecdf(profiles: DataFrame) -> DataFrame:
     """A4/A5 — dashbord.py:104-109: sorted ages paired with 1..N.
 
-    Strict parity requires a global ordering → single-partition window.
-    Documented non-scalable (dashboard-sized inputs only); use
-    :func:`age_histogram` at scale.
-    """
-    w = Window.orderBy("age")
-    return profiles.select("age").select(
-        "age", F.row_number().over(w).cast("long").alias("cum_count")
+    Built from the age histogram (:func:`ecdf_from_histogram`), so the
+    only global ordering is over one row per distinct age, never over
+    the raw rows."""
+    return ecdf_from_histogram(
+        profiles.groupBy("age").agg(F.count(F.lit(1)).alias("count"))
+    )
+
+
+def ecdf_from_histogram(hist: DataFrame) -> DataFrame:
+    """``(age, cum_count)`` rows — one per input row — from an
+    ``(age, count)`` histogram: a running sum over the ages, then each
+    age expands to ``cum - count + 1 .. cum``.
+
+    Tied rows share an age, so this is the same multiset as
+    ``row_number() OVER (ORDER BY age)`` over the raw rows. NULL ages
+    sort last, as in the SQL default the oracles use. The window spans
+    one partition, but its input is one row per distinct age."""
+    w = Window.orderBy(F.asc_nulls_last("age")).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    return (
+        hist.withColumn("cum", F.sum("count").over(w))
+        .select(
+            "age",
+            F.explode(
+                F.sequence(F.col("cum") - F.col("count") + 1, F.col("cum"))
+            ).alias("cum_count"),
+        )
     )
 
 
@@ -84,12 +106,12 @@ def similar_profiles(profiles: DataFrame) -> DataFrame:
 
 def age_histogram(profiles: DataFrame) -> DataFrame:
     """Scalable form of the age-distribution view: one row per age.
-    Cumulative counts, if needed, come from a window over the ~80-row
-    aggregate — not over the raw data."""
+    Cumulative counts come from a window over this ~80-row aggregate,
+    not over the raw data (:func:`ecdf_from_histogram`)."""
     return (
         profiles.groupBy("age")
         .agg(F.count(F.lit(1)).alias("count"))
-        .orderBy("age")
+        .orderBy(F.asc_nulls_last("age"))
     )
 
 
