@@ -623,17 +623,6 @@ def customer_revenue_quartiles(orders: DataFrame) -> DataFrame:
     )
 
 
-def user_event_type_sets_array(events: DataFrame) -> DataFrame:
-    """Set-valued aggregation: distinct event types per user, sorted
-    for deterministic comparison. Array-typed variant — kept as the
-    natural API; the registered query uses the string form below
-    because array cells aren't portable across result hashers."""
-    return events.groupBy("user_id").agg(
-        F.sort_array(F.collect_set("event_type")).alias("types"),
-        F.size(F.collect_set("event_type")).alias("n_types"),
-    )
-
-
 def user_event_type_sets(events: DataFrame) -> DataFrame:
     """Distinct event types per user as a sorted comma-joined string
     (portable scalar rendering of the set) plus the set cardinality."""

@@ -2104,45 +2104,6 @@ def fuzzy_part_matches(part: DataFrame, max_distance: int = 2) -> DataFrame:
     )
 
 
-def cross_source_dupes(
-    docs: DataFrame, jaccard_threshold: float = 0.6
-) -> DataFrame:
-    """Cross-source near-duplicate pairs — the contamination DETAIL
-    view (which documents leaked between which sources), complementing
-    source_overlap_matrix's aggregate counts. Same MinHash-LSH
-    candidate generation as near_dedup_minhash, with the same-source
-    pairs dropped BEFORE the exact-Jaccard verify (the source tag
-    joins in on the doc key, so the filter costs two keyed lookups,
-    not a shuffle of the shingle table).
-
-    Scale shape: identical to near_dedup_minhash (banded buckets,
-    never all-pairs); the source filter only shrinks the verify input.
-    """
-    pairs = lsh_candidate_pairs(docs)
-    src = docs.select("doc_id", "source")
-    tagged = (
-        pairs.join(
-            src.withColumnRenamed("doc_id", "doc_a").withColumnRenamed(
-                "source", "source_a"
-            ),
-            "doc_a",
-        )
-        .join(
-            src.withColumnRenamed("doc_id", "doc_b").withColumnRenamed(
-                "source", "source_b"
-            ),
-            "doc_b",
-        )
-        .filter(F.col("source_a") != F.col("source_b"))
-    )
-    verified = ngram_jaccard_pairs(docs, tagged.select("doc_a", "doc_b"))
-    return (
-        verified.filter(F.col("jaccard") >= jaccard_threshold)
-        .join(F.broadcast(tagged), ["doc_a", "doc_b"])
-        .select("doc_a", "doc_b", "source_a", "source_b", "jaccard")
-    )
-
-
 def minhash_accuracy_report(
     docs: DataFrame,
     n_hashes: int = MINHASH_FUNCS,
@@ -3507,13 +3468,6 @@ def ledger_from_marked(marked: DataFrame) -> DataFrame:
     return per_doc
 
 
-def new_digests_from_marked(marked: DataFrame) -> DataFrame:
-    """The digests a batch introduces, off the shared marked
-    relation: distinct digests of chunks absent from the index (a
-    kept-or-batch-dup chunk's digest is exactly a new digest)."""
-    return marked.filter(~F.col("in_corpus")).select("digest").distinct()
-
-
 def new_digest_refs_from_marked(marked: DataFrame) -> DataFrame:
     """The batch's NEW digests with their occurrence counts, off the
     shared marked relation — the presence-bearing `adds` segment.
@@ -3559,24 +3513,6 @@ def chunk_dedup_batch_ledger(
     from .text import cdc_chunk_table
 
     return ledger_from_marked(
-        chunk_dedup_marked(
-            corpus_digests, cdc_chunk_table(batch, tokenizer=tokenizer)
-        )
-    )
-
-
-def chunk_dedup_new_digests(
-    corpus_digests: DataFrame,
-    batch: DataFrame,
-    tokenizer: str = "whitespace",
-) -> DataFrame:
-    """The digests a batch introduces: its distinct chunk digests
-    absent from the index. This is what the streaming maintenance
-    appends per micro-batch (the index grows by exactly the kept
-    content). `tokenizer`: the index's recorded mode."""
-    from .text import cdc_chunk_table
-
-    return new_digests_from_marked(
         chunk_dedup_marked(
             corpus_digests, cdc_chunk_table(batch, tokenizer=tokenizer)
         )

@@ -10,6 +10,13 @@ the driver's hash compare sorts columns by name.
 
 from __future__ import annotations
 
+import contextlib
+import glob
+import os
+import re
+import shutil
+import tempfile
+import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -41,22 +48,18 @@ ORACLES: dict[str, str] = {}
 
 
 # ------------------------------------------------------------------
-# Lifecycle-stream phase walls (round-9 ask #4): the bench gate's
-# only recurring flags were high-variance lifecycle streams whose
-# wall mixes three phases — artifact BUILD, micro-batch STREAM, and
-# the post-stream FOLD/read. The instrumented queries record the
-# three walls here on every invocation; bench.py snapshots the map
-# per pass so BENCH_DETAIL carries per-phase timings and drift can
-# be attributed to a phase (micro-batch scheduling) instead of
-# flagging totals.
+# Lifecycle-stream phase walls: a lifecycle stream's wall mixes three
+# phases — artifact BUILD, micro-batch STREAM, and the post-stream
+# FOLD/read/publish. Every stream wrapper records the three walls here
+# on each invocation (through _stream_run); bench.py snapshots the
+# map per pass so BENCH_DETAIL carries per-phase timings and drift can
+# be attributed to a phase instead of flagging totals.
 # ------------------------------------------------------------------
 PHASE_TIMINGS: dict[str, dict[str, float]] = {}
 
 
 def _record_phases(qname: str, t0: float, t1: float, t2: float) -> None:
-    import time as _t
-
-    now = _t.monotonic()
+    now = time.monotonic()
     PHASE_TIMINGS[qname] = {
         "build": round(t1 - t0, 3),
         "stream": round(t2 - t1, 3),
@@ -64,16 +67,88 @@ def _record_phases(qname: str, t0: float, t1: float, t2: float) -> None:
     }
 
 
+@contextlib.contextmanager
+def _work_dir(prefix: str):
+    """An invocation-local scratch dir, removed on exit whether the
+    body returns or raises."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield d
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+# the documents table's columns, as a file-stream schema
+DOC_STREAM_SCHEMA = (
+    "doc_id long, text string, lang string, source string, n_chars long"
+)
+
+
+def _stage_batches(rels, in_dir: str) -> None:
+    """Stage each relation of `rels` as ONE parquet file in `in_dir`,
+    modification times 10 s apart in list order. The file source
+    orders pending files by mtime, so a one-file-per-trigger stream
+    over `in_dir` replays rels[i] as micro-batch i (same-ms writes
+    would otherwise race)."""
+    os.makedirs(in_dir)
+    base_t = time.time()
+    for i, rel in enumerate(rels):
+        stage = f"{in_dir}_stage_{i}"
+        rel.coalesce(1).write.mode("overwrite").parquet(stage)
+        dst = os.path.join(in_dir, f"b{i}.parquet")
+        shutil.move(glob.glob(f"{stage}/part-*.parquet")[0], dst)
+        shutil.rmtree(stage)
+        os.utime(dst, (base_t + 10 * i, base_t + 10 * i))
+
+
+class _StreamRun:
+    """One invocation of a staged-batch stream query: `work` is its
+    scratch dir; `stream` stages the batches and opens the file
+    stream over them (the build phase ends there); `drain` waits the
+    gate's query out (the stream phase ends there)."""
+
+    def __init__(self, work: str):
+        self.work = work
+        self.marks = [time.monotonic()]
+
+    def stream(self, spark, rels, schema: str = DOC_STREAM_SCHEMA):
+        in_dir = os.path.join(self.work, "in")
+        _stage_batches(rels, in_dir)
+        self.marks.append(time.monotonic())
+        return (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(in_dir)
+        )
+
+    def drain(self, q, what: str) -> None:
+        from ..streaming.pipeline import drain
+
+        drain(q, what)
+        self.marks.append(time.monotonic())
+
+
+@contextlib.contextmanager
+def _stream_run(qname: str, prefix: str):
+    """Stage → start → drain lifecycle of a registry stream query: a
+    `_work_dir`, and on a normal exit the build / stream / fold walls
+    recorded under `qname` (fold runs to the end of the block, so it
+    includes the result publish)."""
+    with _work_dir(prefix) as work:
+        run = _StreamRun(work)
+        yield run
+        _record_phases(qname, *run.marks)
+
+
 # ------------------------------------------------------------------
-# Session-scoped result scratch (VERDICT r9 ask #5): lifecycle
-# wrappers build artifacts in an invocation-local temp dir that is
-# rmtree'd before returning, so the result relation must outlive the
-# artifact. The previous freeze (collect + createDataFrame) pulled
-# the rows through the DRIVER — harmless at the ≤5k-row bench sizes
-# but a silent bottleneck if any lifecycle query ever returns
-# corpus-scale rows. Instead the result parquet is copied into a
-# session-scoped scratch that outlives the invocation and the query
-# returns a distributed read over it.
+# Session-scoped result scratch: lifecycle wrappers build artifacts
+# in a _work_dir that is removed before returning, so the result
+# relation must outlive the artifact. Collecting the rows and
+# re-creating a DataFrame would pull them through the DRIVER — a
+# silent bottleneck if a lifecycle query ever returns corpus-scale
+# rows — so the result parquet is copied into a session-scoped
+# scratch that outlives the invocation and the query returns a
+# distributed read over it.
 # ------------------------------------------------------------------
 _RESULT_SCRATCH: str | None = None
 _RESULT_SEQ = [0]
@@ -82,11 +157,8 @@ _RESULT_SEQ = [0]
 def _publish_result(spark: SparkSession, out: DataFrame, name: str) -> DataFrame:
     """Write `out` to the session result scratch and return a read
     over it — the distributed replacement for collect+createDataFrame
-    in lifecycle wrappers whose inputs are about to be rmtree'd."""
+    in lifecycle wrappers whose inputs are about to be removed."""
     import atexit
-    import os
-    import shutil
-    import tempfile
 
     global _RESULT_SCRATCH
     if _RESULT_SCRATCH is None:
@@ -217,7 +289,7 @@ def q_kafka_wire_profiles(spark, sf_dir):
 )
 def q_kafka_wire_roundtrip(spark, sf_dir):
     """K4's producer-sink wire contract closed offline the way S1's
-    was (VERDICT r3 #1): the unchanged ETL curates the Kafka wire
+    was: the unchanged ETL curates the Kafka wire
     feed, `producer_wire_records` serializes every row to the exact
     producer record shape (key = id bytes, value = canonical JSON
     bytes — reference producer.py:40-42's role, but keyed), the
@@ -914,10 +986,25 @@ def q_above_avg_orders(spark, sf_dir):
 # ------------------------------------------------------------------
 
 
-def _events_stream(spark, sf_dir):
-    import os
-    import tempfile
+_GLOB_META = re.compile(r"([\\\[\]{}*?])")
 
+
+def _stream_path(path: str) -> str:
+    """A path the file stream source reads `path` through. A
+    directory of part files (Spark-written corpora, the soak harness)
+    streams as is. A single parquet file (the test data) cannot: the
+    source takes a plain path as its partition basePath, which must
+    be a directory — but it takes none from a glob, so the file's
+    last character becomes a one-character class that matches only
+    that file (the rest glob-escaped). No link dir, nothing to clean
+    up."""
+    if os.path.isdir(path):
+        return path
+    head = _GLOB_META.sub(r"\\\1", path[:-1])
+    return f"{head}[{path[-1]}]"
+
+
+def _events_stream(spark, sf_dir):
     import pyarrow as pa
 
     from pyspark.sql import functions as F
@@ -925,21 +1012,7 @@ def _events_stream(spark, sf_dir):
     from ..sources.readers import parquet_schema
 
     path = os.path.join(sf_dir, "events.parquet")
-    # The file streaming source wants a directory of data files.
-    # testdata ships events.parquet as a SINGLE file → expose it
-    # through a temp-dir symlink; Spark-written corpora (the soak
-    # harness) ship it as a DIRECTORY of part files → stream straight
-    # from it (the file index already skips _SUCCESS/._* markers).
-    # The directory case previously symlinked the whole dir as one
-    # node, which the source listed as an empty nested dir — that gap
-    # kept the streaming queries out of soak coverage (VERDICT r3 #2).
-    if os.path.isdir(path):
-        d = path
-    else:
-        d = tempfile.mkdtemp(prefix="events_stream_")
-        link = os.path.join(d, "events.parquet")
-        if not os.path.exists(link):
-            os.symlink(path, link)
+    d = _stream_path(path)
     # The readStream schema must match the file's physical ts flavor
     # (the batch reader's adaptive logic — readers.load_table — has no
     # streaming twin, so probe the footer here the same way).
@@ -981,6 +1054,8 @@ def _events_stream(spark, sf_dir):
 def _run_to_memory(df, output_mode: str = "complete"):
     import uuid
 
+    from ..streaming.pipeline import drain
+
     name = "q_" + uuid.uuid4().hex[:12]
     spark = df.sparkSession
     # Stateful micro-batches pay a per-partition state-store init; at
@@ -995,7 +1070,7 @@ def _run_to_memory(df, output_mode: str = "complete"):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        drain(q, f"memory-sink {name}")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)
@@ -1074,23 +1149,22 @@ def q_streaming_enriched(spark, sf_dir):
     against a static dimension (re-read and broadcast every
     micro-batch — the slowly-changing-dim pattern). availableNow
     single batch == the batch left join, which is the oracle."""
-    import tempfile
-
     from ..streaming.pipeline import enriched_stream, read_envelope_file_stream
 
-    d = tempfile.mkdtemp(prefix="enrich_stream_")
     env = envelopes_from_customers(load_table(spark, sf_dir, "customer")).select(
         "value"
     )
-    env.write.mode("overwrite").text(d)
     dim = spark.createDataFrame(
         [("female", "F"), ("male", "M")], "gender string, gender_code string"
     )
-    src = read_envelope_file_stream(spark, d)
-    out = enriched_stream(src, dim).select(
-        "id", "username", "gender", "age", "gender_code"
-    )
-    return _run_to_memory(out, output_mode="append")
+    # the memory sink holds the result: the source dir can go once drained
+    with _work_dir("enrich_stream_") as d:
+        env.write.mode("overwrite").text(d)
+        src = read_envelope_file_stream(spark, d)
+        out = enriched_stream(src, dim).select(
+            "id", "username", "gender", "age", "gender_code"
+        )
+        return _run_to_memory(out, output_mode="append")
 
 
 @query(
@@ -1179,7 +1253,7 @@ def q_lang_confusion(spark, sf_dir):
 # interpolates f-strings in file order
 _NONWS_SQL = ", ".join(f"'{l}'" for l in dedup.NONWS_LANGS)
 
-# the lang-aware token UNIT (r12 budget-tier migration): chars for
+# the lang-aware token UNIT (the budget-tier unit): chars for
 # the no-whitespace scripts, whitespace words otherwise (NULL lang →
 # ELSE → word path) — SQL mirror of text.budget_token_count
 _LA_NTOK_SQL = (
@@ -1221,7 +1295,7 @@ def q_top_ngrams(spark, sf_dir):
              FROM documents WHERE lang IN ({_NONWS_SQL}))""",
 )
 def q_chunk_documents(spark, sf_dir):
-    """Context-window chunking in the honest token unit (r12): word
+    """Context-window chunking in the honest token unit: word
     windows for whitespace scripts, CHAR windows on the NONWS_LANGS
     partition — whitespace windowing saw a de-spaced CJK doc as one
     'token' and emitted a single whole-doc chunk."""
@@ -1280,8 +1354,8 @@ def q_doc_fingerprints(spark, sf_dir):
                     FROM documents))""",
 )
 def q_pack_documents(spark, sf_dir):
-    """Concatenation packing budgeted in the honest token unit
-    (r12): chars for NONWS_LANGS docs — the whitespace unit counted
+    """Concatenation packing budgeted in the honest token unit:
+    chars for NONWS_LANGS docs — the whitespace unit counted
     a de-spaced CJK doc as ONE token, so packs under-filled ~300×
     on that partition."""
     return text.pack_documents(_t(spark, sf_dir, "documents"))
@@ -1561,7 +1635,7 @@ def _cdc_ctes(rel: str, p: str = "", tokenizer: str = "whitespace") -> str:
 )
 def q_near_dedup_minhash(spark, sf_dir):
     """The near-dup funnel on its DEFAULT (language-aware) tokenizer
-    (VERDICT r9 ask #3), over a fixture where the default matters:
+    over a fixture where the default matters:
     synthetic dupes ∪ the planted de-spaced CJK docs. The whitespace
     compat form (tokenizer="whitespace") provably misses every
     planted CJK near-dup pair — pytest pins the delta; the oracle
@@ -1600,7 +1674,7 @@ WHERE floor(n_inter / (sa.n_sh + sb.n_sh - n_inter) * 10000 + 0.5)
 )
 def q_lang_band_index_probe(spark, sf_dir):
     """The honest tokenizer reaching the MAINTAINED band artifact
-    (r10: the wave-2 follow-up): the tokenizer is now a recorded
+    — the tokenizer is now a recorded
     artifact parameter (`_tokenizer.json`) and every add/probe path
     reads it, so a lang-aware index bands the no-whitespace
     partition on char 6-grams end-to-end. The planted CJK variants
@@ -1610,7 +1684,7 @@ def q_lang_band_index_probe(spark, sf_dir):
     The oracle replays the lang-keyed chain over base ∪ batch
     restricted to cross (base × batch) pairs — exactly the probe's
     candidate shape. The base index comes from the build-once
-    session artifact cache (VERDICT r10 #2 — the per-invocation
+    session artifact cache (the per-invocation
     rebuild was 6.05 s and linear in the corpus on soak; the
     maintained-artifact economics say production builds once and
     probes many times, so the query should too). The probe path
@@ -1718,7 +1792,7 @@ SELECT * FROM (
 ) ORDER BY tokenizer""",
 )
 def q_lang_dedup_delta_report(spark, sf_dir):
-    """Language-aware tokenization tier (round-9 ask #7): the planted
+    """Language-aware tokenization tier: the planted
     non-whitespace fixture (de-spaced zh docs + near-dup tails) runs
     through the SAME minhash→LSH→Jaccard funnel under both
     tokenizers. Whitespace word shingles see each zh doc as one
@@ -1836,7 +1910,7 @@ SELECT n_pairs, n_exact_degenerate, n_near_degenerate,
 FROM c CROSS JOIN p""",
 )
 def q_preference_pair_near_dup_audit(spark, sf_dir):
-    """preference_pair_audit widened (VERDICT r9 ask #6): planted
+    """preference_pair_audit widened: planted
     chosen≈rejected NEAR-degenerate pairs (rejected = chosen + one
     hedging token — byte-inequal, Jaccard 0.75) detected by the
     content-addressed Jaccard verify running directly on the pair
@@ -2045,12 +2119,6 @@ def q_streaming_cluster_update(spark, sf_dir):
     components — batch 1 near-dups against batch 0's content through
     the adds segments, and the final artifact must equal the full
     recompute over corpus ∪ both batches, label-for-label."""
-    import glob as _glob
-    import os as _os
-    import shutil
-    import tempfile
-    import time as _time
-
     from ..streaming.pipeline import run_cluster_update_stream
 
     docs = _t(spark, sf_dir, "documents")
@@ -2060,16 +2128,15 @@ def q_streaming_cluster_update(spark, sf_dir):
     )
     b1 = dupes.filter(F.col("doc_id") >= 200000)
     cached_band = _band_index_path(spark, sf_dir)  # immutable cache
-    work = tempfile.mkdtemp(prefix="cluster_stream_")
-    try:
-        _ph0 = _time.monotonic()
+    with _stream_run("streaming_cluster_update", "cluster_stream_") as run:
+        work = run.work
         # invocation-local band index: symlink the cached base bands,
         # adds stay local so the shared artifact is never mutated
         bidx = f"{work}/bidx"
-        _os.makedirs(bidx)
-        _os.symlink(
-            _os.path.join(cached_band, "bands"),
-            _os.path.join(bidx, "bands"),
+        os.makedirs(bidx)
+        os.symlink(
+            os.path.join(cached_band, "bands"),
+            os.path.join(bidx, "bands"),
         )
         # seed: the corpus's own clusters from the maintained-labels
         # cache (none of its pairs are rediscovered by the stream);
@@ -2078,40 +2145,15 @@ def q_streaming_cluster_update(spark, sf_dir):
         shutil.copytree(
             _labels_dir_cached(sf_dir, "labelsdocs", lambda: docs), lab
         )
-        in_dir = f"{work}/in"
-        _os.makedirs(in_dir)
-        base_t = _time.time()
-        for i, b in enumerate((b0, b1)):
-            stage = f"{work}/stage_{i}"
-            b.coalesce(1).write.mode("overwrite").parquet(stage)
-            part = _glob.glob(f"{stage}/part-*.parquet")[0]
-            dst = f"{in_dir}/b{i}.parquet"
-            shutil.move(part, dst)
-            _os.utime(dst, (base_t + 10 * i, base_t + 10 * i))
-        _ph1 = _time.monotonic()
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, text string, lang string, "
-                "source string, n_chars long"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
+        stream = run.stream(spark, (b0, b1))
+        run.drain(
+            run_cluster_update_stream(
+                spark, stream, bidx, docs, lab, f"{work}/ckpt"
+            ),
+            "cluster-update",
         )
-        q = run_cluster_update_stream(
-            spark, stream, bidx, docs, lab, f"{work}/ckpt"
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "cluster-update stream did not drain within 300 s"
-                + (f": {q.exception()}" if q.exception() else "")
-            )
-        _ph2 = _time.monotonic()
         out = _rpp(spark, f"{lab}/labels").orderBy("doc_id")
-        _record_phases("streaming_cluster_update", _ph0, _ph1, _ph2)
         return _publish_result(spark, out, "streaming_cluster_update")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(
@@ -2174,12 +2216,6 @@ def q_streaming_cluster_erase(spark, sf_dir):
     batch+stream governance symmetry, closed on the fourth artifact.
     Replay safety is algebraic (erasure is idempotent), pytest-proven
     via a checkpoint-reset replay."""
-    import glob as _glob
-    import os as _os
-    import shutil
-    import tempfile
-    import time as _time
-
     from ..streaming.pipeline import run_cluster_erase_stream
 
     dupes = _dupes_df(spark, sf_dir)
@@ -2192,46 +2228,23 @@ def q_streaming_cluster_erase(spark, sf_dir):
     ).select("doc_id")
     b0 = er.filter(F.col("doc_id") % 8 == 1)
     b1 = er.filter(F.col("doc_id") % 8 == 5)
-    work = tempfile.mkdtemp(prefix="cluster_erase_stream_")
-    try:
-        _ph0 = _time.monotonic()
+    with _stream_run("streaming_cluster_erase", "cluster_erase_stream_") as run:
+        work = run.work
         # the maintained artifact from the build-once cache, copied
         # invocation-locally — the streamed erase folds mutate it
         lab = f"{work}/lab"
         shutil.copytree(
             _labels_dir_cached(sf_dir, "labelsdupes", lambda: dupes), lab
         )
-        in_dir = f"{work}/in"
-        _os.makedirs(in_dir)
-        base_t = _time.time()
-        for i, b in enumerate((b0, b1)):
-            stage = f"{work}/stage_{i}"
-            b.coalesce(1).write.mode("overwrite").parquet(stage)
-            part = _glob.glob(f"{stage}/part-*.parquet")[0]
-            dst = f"{in_dir}/b{i}.parquet"
-            shutil.move(part, dst)
-            _os.utime(dst, (base_t + 10 * i, base_t + 10 * i))
-        _ph1 = _time.monotonic()
-        stream = (
-            spark.readStream.schema("doc_id long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
+        stream = run.stream(spark, (b0, b1), schema="doc_id long")
+        run.drain(
+            run_cluster_erase_stream(
+                spark, stream, lab, dupes, f"{work}/ckpt"
+            ),
+            "cluster-erase",
         )
-        q = run_cluster_erase_stream(
-            spark, stream, lab, dupes, f"{work}/ckpt"
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "cluster-erase stream did not drain within 300 s"
-                + (f": {q.exception()}" if q.exception() else "")
-            )
-        _ph2 = _time.monotonic()
         out = _rpp(spark, f"{lab}/labels").orderBy("doc_id")
-        _record_phases("streaming_cluster_erase", _ph0, _ph1, _ph2)
         return _publish_result(spark, out, "streaming_cluster_erase")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # dupes minus the band/chunk erase set (one GDPR request hitting all
@@ -2336,7 +2349,6 @@ def q_erasure_completeness_audit(spark, sf_dir):
     codes copied invocation-locally so the shared cached artifact is
     never mutated."""
     import shutil
-    import tempfile
 
     import os as _os
 
@@ -2417,8 +2429,6 @@ def q_erasure_completeness_audit(spark, sf_dir):
     # pool (it is shared with other queries; building it under two
     # threads would race its publish marker)
     src = _ivfpq_index_post_erase(spark, sf_dir)
-
-    work = tempfile.mkdtemp(prefix="erasure_audit_")
 
     # the six artifact lifecycles are INDEPENDENT (disjoint dirs,
     # disjoint Spark relations): run them on a small thread pool so
@@ -2562,22 +2572,23 @@ def q_erasure_completeness_audit(spark, sf_dir):
 
     from concurrent.futures import ThreadPoolExecutor
 
-    try:
-        with ThreadPoolExecutor(max_workers=6) as pool:
-            futs = [
-                pool.submit(f)
-                for f in (
-                    _band,
-                    _chunk,
-                    _labels,
-                    _ivfpq,
-                    _manifest,
-                    _pfx,
-                )
-            ]
-            rows = [f.result() for f in futs]
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    # the workers above run in `work`, removed once all have returned
+    with (
+        _work_dir("erasure_audit_") as work,
+        ThreadPoolExecutor(max_workers=6) as pool,
+    ):
+        futs = [
+            pool.submit(f)
+            for f in (
+                _band,
+                _chunk,
+                _labels,
+                _ivfpq,
+                _manifest,
+                _pfx,
+            )
+        ]
+        rows = [f.result() for f in futs]
     return spark.createDataFrame(
         rows,
         "artifact string, n_requested long, n_serving_rows long, "
@@ -2622,7 +2633,7 @@ SELECT * FROM (
 ) ORDER BY artifact""",
 )
 def q_erasure_request_ledger_audit(spark, sf_dir):
-    """Durable erase-request ledger audit (round-9 ask #2): one GDPR
+    """Durable erase-request ledger audit: one GDPR
     request is durably OPENED (subject ids recorded before any
     artifact is touched), then driven across all six maintained
     artifacts by apply_erase_request — with a planted driver crash
@@ -2636,7 +2647,7 @@ def q_erasure_request_ledger_audit(spark, sf_dir):
     content-derived) — the manifest is value-checked shard-for-shard against
     the rebuild-without-erased fold, since it has no per-doc rows.
 
-    This closes the VERDICT r8 seam: erasure_completeness_audit
+    This closes a seam: erasure_completeness_audit
     proves a fresh synchronous application; THIS proves the durable
     workflow — a crash mid-sequence leaves a visible, resumable gap
     instead of a silent 3-of-5 application.
@@ -2648,7 +2659,6 @@ def q_erasure_request_ledger_audit(spark, sf_dir):
     set. Cites reference scope: the reference pipeline
     (Real_Time_Data.py) has no erasure story; extension tier."""
     import shutil
-    import tempfile
 
     import os as _os
 
@@ -2709,217 +2719,216 @@ def q_erasure_request_ledger_audit(spark, sf_dir):
 
     cache = _artifact_dir_cached(sf_dir, "ledgeraudit", _build_pristine)
 
-    work = tempfile.mkdtemp(prefix="erase_ledger_")
     try:
-        led = f"{work}/ledger"
-        bidx = f"{work}/bidx"
-        cidx = f"{work}/cidx"
-        lab = f"{work}/lab"
-        mpath = f"{work}/manifest"
-        pfx = f"{work}/pfx"
-        for sub in ("bidx", "cidx", "lab", "manifest", "pfx"):
-            shutil.copytree(f"{cache}/{sub}", f"{work}/{sub}")
-        # IVF-PQ: the session-cached base artifact, codes copied
-        # invocation-locally so the shared artifact is never mutated
-        import tempfile as _tf
+        with _work_dir("erase_ledger_") as work:
+            led = f"{work}/ledger"
+            bidx = f"{work}/bidx"
+            cidx = f"{work}/cidx"
+            lab = f"{work}/lab"
+            mpath = f"{work}/manifest"
+            pfx = f"{work}/pfx"
+            for sub in ("bidx", "cidx", "lab", "manifest", "pfx"):
+                shutil.copytree(f"{cache}/{sub}", f"{work}/{sub}")
+            # IVF-PQ: the session-cached base artifact, codes copied
+            # invocation-locally so the shared artifact is never mutated
+            import tempfile as _tf
 
-        _ivfpq_index(spark, sf_dir)  # ensure the cached base exists
-        src = _os.path.join(
-            _tf.gettempdir(), f"ivfpq_index_v1_{_ivfpq_tag(sf_dir)}"
-        )
-        vidx = f"{work}/vidx"
-        _os.makedirs(vidx)
-        _os.symlink(_os.path.join(src, "centroids"), f"{vidx}/centroids")
-        _os.symlink(_os.path.join(src, "codebooks"), f"{vidx}/codebooks")
-        shutil.copytree(_os.path.join(src, "codes"), f"{vidx}/codes")
+            _ivfpq_index(spark, sf_dir)  # ensure the cached base exists
+            src = _os.path.join(
+                _tf.gettempdir(), f"ivfpq_index_v1_{_ivfpq_tag(sf_dir)}"
+            )
+            vidx = f"{work}/vidx"
+            _os.makedirs(vidx)
+            _os.symlink(_os.path.join(src, "centroids"), f"{vidx}/centroids")
+            _os.symlink(_os.path.join(src, "codebooks"), f"{vidx}/codebooks")
+            shutil.copytree(_os.path.join(src, "codes"), f"{vidx}/codes")
 
-        dupes_all = dedup.with_synthetic_dupes(corpus)
+            dupes_all = dedup.with_synthetic_dupes(corpus)
 
-        def appliers(crash_at=None):
-            def wrap(name, f):
-                def g(ids):
-                    if name == crash_at:
-                        raise RuntimeError("planted driver crash")
-                    f(ids)
+            def appliers(crash_at=None):
+                def wrap(name, f):
+                    def g(ids):
+                        if name == crash_at:
+                            raise RuntimeError("planted driver crash")
+                        f(ids)
 
-                return g
+                    return g
 
-            return {
-                "band_index": wrap(
-                    "band_index",
-                    lambda ids: dedup.band_index_erase(spark, bidx, ids),
-                ),
-                "chunk_digest_index": wrap(
-                    "chunk_digest_index",
-                    lambda ids: chunk_index_erase(
-                        spark,
-                        cidx,
-                        corpus.join(
-                            F.broadcast(ids), "doc_id", "left_semi"
+                return {
+                    "band_index": wrap(
+                        "band_index",
+                        lambda ids: dedup.band_index_erase(spark, bidx, ids),
+                    ),
+                    "chunk_digest_index": wrap(
+                        "chunk_digest_index",
+                        lambda ids: chunk_index_erase(
+                            spark,
+                            cidx,
+                            corpus.join(
+                                F.broadcast(ids), "doc_id", "left_semi"
+                            ),
                         ),
                     ),
-                ),
-                "cluster_labels": wrap(
-                    "cluster_labels",
-                    lambda ids: cluster_labels_erase_artifact(
-                        spark, lab, dupes_all, ids
-                    ),
-                ),
-                "ivfpq_codes": wrap(
-                    "ivfpq_codes",
-                    lambda ids: similarity.ivfpq_erase(
-                        spark,
-                        vidx,
-                        ids.select(F.col("doc_id").alias("vec_id")),
-                    ),
-                ),
-                "sft_prefix_index": wrap(
-                    "sft_prefix_index",
-                    lambda ids: sft_prefix_index_erase(spark, pfx, ids),
-                ),
-                "shard_manifest": wrap(
-                    "shard_manifest",
-                    lambda ids: manifest_erase(
-                        spark,
-                        mpath,
-                        corpus.join(
-                            F.broadcast(ids), "doc_id", "left_semi"
+                    "cluster_labels": wrap(
+                        "cluster_labels",
+                        lambda ids: cluster_labels_erase_artifact(
+                            spark, lab, dupes_all, ids
                         ),
                     ),
-                ),
+                    "ivfpq_codes": wrap(
+                        "ivfpq_codes",
+                        lambda ids: similarity.ivfpq_erase(
+                            spark,
+                            vidx,
+                            ids.select(F.col("doc_id").alias("vec_id")),
+                        ),
+                    ),
+                    "sft_prefix_index": wrap(
+                        "sft_prefix_index",
+                        lambda ids: sft_prefix_index_erase(spark, pfx, ids),
+                    ),
+                    "shard_manifest": wrap(
+                        "shard_manifest",
+                        lambda ids: manifest_erase(
+                            spark,
+                            mpath,
+                            corpus.join(
+                                F.broadcast(ids), "doc_id", "left_semi"
+                            ),
+                        ),
+                    ),
+                }
+
+            gov.erase_request_open(spark, led, "req1", subj_ids)
+            try:
+                gov.apply_erase_request(
+                    spark, led, "req1", appliers(crash_at="shard_manifest")
+                )
+                raise AssertionError("planted crash did not fire")
+            except RuntimeError:
+                pass
+            pend_crash = {
+                r.artifact: 1 - r.applied
+                for r in gov.erase_request_status(spark, led).collect()
+            }
+            gov.apply_erase_request(spark, led, "req1", appliers())
+            pend_resume = {
+                r.artifact: 1 - r.applied
+                for r in gov.erase_request_status(spark, led).collect()
             }
 
-        gov.erase_request_open(spark, led, "req1", subj_ids)
-        try:
-            gov.apply_erase_request(
-                spark, led, "req1", appliers(crash_at="shard_manifest")
-            )
-            raise AssertionError("planted crash did not fire")
-        except RuntimeError:
-            pass
-        pend_crash = {
-            r.artifact: 1 - r.applied
-            for r in gov.erase_request_status(spark, led).collect()
-        }
-        gov.apply_erase_request(spark, led, "req1", appliers())
-        pend_resume = {
-            r.artifact: 1 - r.applied
-            for r in gov.erase_request_status(spark, led).collect()
-        }
-
-        # post-resume: zero serving rows reference the subjects.
-        # The six checks are independent reads of disjoint artifacts
-        # — run them on a thread pool so the serial chains of
-        # request-sized jobs overlap (guide §2.6); the erase APPLIES
-        # above stay sequential (the ledger's deterministic apply
-        # order is what the planted crash tests).
-        def _ref_band():
-            return int(
-                dedup.read_band_index_serving(spark, bidx)
-                .join(F.broadcast(subj_ids), "doc_id", "left_semi")
-                .count()
-            )
-
-        def _ref_chunk():
-            chunks = _rpp(spark, f"{cache}/chunks")
-            subj_only = (
-                chunks.join(
-                    F.broadcast(subj_ids), "doc_id", "left_semi"
+            # post-resume: zero serving rows reference the subjects.
+            # The six checks are independent reads of disjoint artifacts
+            # — run them on a thread pool so the serial chains of
+            # request-sized jobs overlap (guide §2.6); the erase APPLIES
+            # above stay sequential (the ledger's deterministic apply
+            # order is what the planted crash tests).
+            def _ref_band():
+                return int(
+                    dedup.read_band_index_serving(spark, bidx)
+                    .join(F.broadcast(subj_ids), "doc_id", "left_semi")
+                    .count()
                 )
-                .select("digest")
-                .distinct()
-                .join(
+
+            def _ref_chunk():
+                chunks = _rpp(spark, f"{cache}/chunks")
+                subj_only = (
                     chunks.join(
-                        F.broadcast(subj_ids), "doc_id", "left_anti"
+                        F.broadcast(subj_ids), "doc_id", "left_semi"
                     )
                     .select("digest")
-                    .distinct(),
-                    "digest",
-                    "left_anti",
-                )
-            )
-            return int(
-                read_chunk_digest_index(spark, cidx)
-                .select("digest")
-                .distinct()
-                .join(subj_only, "digest", "left_semi")
-                .count()
-            )
-
-        def _ref_labels():
-            return int(
-                _rpp(spark, f"{lab}/labels")
-                .join(F.broadcast(subj_ids), "doc_id", "left_semi")
-                .count()
-            )
-
-        def _ref_pfx():
-            return int(
-                read_sft_prefix_index(spark, pfx)
-                .join(F.broadcast(subj_ids), "doc_id", "left_semi")
-                .count()
-            )
-
-        def _ref_ivfpq():
-            return int(
-                similarity.read_ivfpq_index_serving(spark, vidx)[
-                    "codes"
-                ]
-                .join(
-                    F.broadcast(
-                        subj_ids.select(
-                            F.col("doc_id").alias("vec_id")
+                    .distinct()
+                    .join(
+                        chunks.join(
+                            F.broadcast(subj_ids), "doc_id", "left_anti"
                         )
-                    ),
-                    "vec_id",
-                    "left_semi",
+                        .select("digest")
+                        .distinct(),
+                        "digest",
+                        "left_anti",
+                    )
                 )
-                .count()
-            )
+                return int(
+                    read_chunk_digest_index(spark, cidx)
+                    .select("digest")
+                    .distinct()
+                    .join(subj_only, "digest", "left_semi")
+                    .count()
+                )
 
-        def _ref_manifest():
-            # the manifest has no per-doc rows: "referencing" =
-            # shards whose served (n_docs, n_tokens, xor) differ
-            # from the rebuild-without-erased fold
-            served = read_manifest_serving(spark, mpath)
-            want = _manifest_shard_rows(survivors)
-            return int(
-                served.unionByName(want)
-                .groupBy("shard", "n_docs", "n_tokens", "content_xor")
-                .count()
-                .filter(F.col("count") != 2)
-                .count()
-            )
+            def _ref_labels():
+                return int(
+                    _rpp(spark, f"{lab}/labels")
+                    .join(F.broadcast(subj_ids), "doc_id", "left_semi")
+                    .count()
+                )
 
-        from concurrent.futures import ThreadPoolExecutor
+            def _ref_pfx():
+                return int(
+                    read_sft_prefix_index(spark, pfx)
+                    .join(F.broadcast(subj_ids), "doc_id", "left_semi")
+                    .count()
+                )
 
-        ref_workers = {
-            "band_index": _ref_band,
-            "chunk_digest_index": _ref_chunk,
-            "cluster_labels": _ref_labels,
-            "sft_prefix_index": _ref_pfx,
-            "ivfpq_codes": _ref_ivfpq,
-            "shard_manifest": _ref_manifest,
-        }
-        with ThreadPoolExecutor(max_workers=6) as pool:
-            futs = {
-                art: pool.submit(f) for art, f in ref_workers.items()
+            def _ref_ivfpq():
+                return int(
+                    similarity.read_ivfpq_index_serving(spark, vidx)[
+                        "codes"
+                    ]
+                    .join(
+                        F.broadcast(
+                            subj_ids.select(
+                                F.col("doc_id").alias("vec_id")
+                            )
+                        ),
+                        "vec_id",
+                        "left_semi",
+                    )
+                    .count()
+                )
+
+            def _ref_manifest():
+                # the manifest has no per-doc rows: "referencing" =
+                # shards whose served (n_docs, n_tokens, xor) differ
+                # from the rebuild-without-erased fold
+                served = read_manifest_serving(spark, mpath)
+                want = _manifest_shard_rows(survivors)
+                return int(
+                    served.unionByName(want)
+                    .groupBy("shard", "n_docs", "n_tokens", "content_xor")
+                    .count()
+                    .filter(F.col("count") != 2)
+                    .count()
+                )
+
+            from concurrent.futures import ThreadPoolExecutor
+
+            ref_workers = {
+                "band_index": _ref_band,
+                "chunk_digest_index": _ref_chunk,
+                "cluster_labels": _ref_labels,
+                "sft_prefix_index": _ref_pfx,
+                "ivfpq_codes": _ref_ivfpq,
+                "shard_manifest": _ref_manifest,
             }
-            ref = {art: fut.result() for art, fut in futs.items()}
+            with ThreadPoolExecutor(max_workers=6) as pool:
+                futs = {
+                    art: pool.submit(f) for art, f in ref_workers.items()
+                }
+                ref = {art: fut.result() for art, fut in futs.items()}
 
-        rows = [
-            (
-                art,
-                n_subjects,
-                int(pend_crash[art]),
-                int(pend_resume[art]),
-                int(ref[art]),
-            )
-            for art in gov.ERASURE_ARTIFACTS
-        ]
+            rows = [
+                (
+                    art,
+                    n_subjects,
+                    int(pend_crash[art]),
+                    int(pend_resume[art]),
+                    int(ref[art]),
+                )
+                for art in gov.ERASURE_ARTIFACTS
+            ]
     finally:
         corpus.unpersist()
-        shutil.rmtree(work, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "artifact string, n_subjects long, pending_at_crash long, "
@@ -2927,7 +2936,7 @@ def q_erasure_request_ledger_audit(spark, sf_dir):
     ).orderBy("artifact")
 
 
-# --- erasure-latency SLA fixture (VERDICT r10 ask #5): four planted
+# --- erasure-latency SLA fixture: four planted
 # requests covering the quadrants a DPO dashboard must distinguish —
 # completed on time, completed LATE (recorded breach), stuck past the
 # deadline (live breach), and in-flight within deadline. Event times
@@ -3009,7 +3018,7 @@ ORDER BY request_id""",
 )
 def q_erasure_sla_audit(spark, sf_dir):
     """Per-request END-TO-END erasure latency vs a 72 h policy
-    deadline (VERDICT r10 ask #5 — the TIME dimension the GDPR story
+    deadline (the TIME dimension the GDPR story
     was missing: sizing = gdpr_erasure_plan, completeness =
     erasure_completeness_audit, durable intake/resume =
     erasure_request_ledger_audit; nothing reported whether requests
@@ -3030,20 +3039,14 @@ def q_erasure_sla_audit(spark, sf_dir):
     Scale shape: ledger listings are request-sized driver reads (the
     bounded-scalar discipline of every artifact lifecycle); output is
     one row per request."""
-    import shutil
-    import tempfile
-
     from ..operators import governance as gov
 
-    work = tempfile.mkdtemp(prefix="erase_sla_")
-    try:
+    with _work_dir("erase_sla_") as work:
         led = _build_sla_ledger(spark, sf_dir, work)
         out = gov.erase_request_sla_report(
             spark, led, _SLA_DEADLINE, _SLA_AS_OF
         ).orderBy("request_id")
         return _publish_result(spark, out, "erasure_sla_audit")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def _build_sla_ledger(spark, sf_dir: str, work: str) -> str:
@@ -3086,13 +3089,9 @@ def q_erasure_sla_by_artifact(spark, sf_dir):
     through the same public API; oracle replays the join + fold over
     the planted event times. Ledger listings stay request-sized
     driver reads."""
-    import shutil
-    import tempfile
-
     from ..operators import governance as gov
 
-    work = tempfile.mkdtemp(prefix="erase_sla_art_")
-    try:
+    with _work_dir("erase_sla_art_") as work:
         led = _build_sla_ledger(spark, sf_dir, work)
         per = gov.erase_request_artifact_latency(spark, led)
         out = (
@@ -3109,8 +3108,6 @@ def q_erasure_sla_by_artifact(spark, sf_dir):
             .orderBy("artifact")
         )
         return _publish_result(spark, out, "erasure_sla_by_artifact")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # the SLA fixture as a STREAM of ledger events: batch 0 = everything
@@ -3181,9 +3178,8 @@ FROM ints i LEFT JOIN apps a
 ORDER BY batch_id, request_id""",
 )
 def q_streaming_erasure_sla_monitor(spark, sf_dir):
-    """The erasure-SLA time dimension as a STREAM (r12 — VERDICT r11
-    #4): the four-quadrant fixture arrives as TWO micro-batches of
-    ledger events (intakes with subject slices, per-artifact applied
+    """The erasure-SLA time dimension as a STREAM: the four-quadrant
+    fixture arrives as TWO micro-batches of ledger events (intakes with subject slices, per-artifact applied
     stamps, all event-time) through run_erasure_sla_stream — each
     batch folds its events into the durable ledger via the public
     API and publishes the SLA report as of the ledger's event-time
@@ -3197,42 +3193,35 @@ def q_streaming_erasure_sla_monitor(spark, sf_dir):
     Scale shape: per-batch driver work is request-sized (ledger
     listing discipline); output is |batches| × |visible requests|
     rows."""
-    import glob as _glob
-    import os as _os
-    import shutil
-    import tempfile
-    import time as _time
-
     from ..streaming.pipeline import run_erasure_sla_stream
 
     docs = _t(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="sla_stream_")
-    try:
-        _ph0 = _time.monotonic()
-        in_dir = f"{work}/in"
-        _os.makedirs(in_dir)
+    with _stream_run("streaming_erasure_sla_monitor", "sla_stream_") as run:
+        work = run.work
         ev_schema = (
             "request_id string, kind string, artifact string, "
             "doc_id long, event_ts long"
         )
-        base_t = _time.time()
-        # One job builds BOTH batch files (r12 perf: the previous
-        # per-request union of docs-filter branches under
-        # coalesce(1) serialized 9 scan branches through one task —
-        # build was 21-31 s of the query's 24 s wall while the
-        # stream phase it was blamed on was <3 s). The intake
-        # slices come from ONE parallel docs scan broadcast-joined
-        # to the 4-row fixture map; applied marks are a local
-        # relation; partitionBy("b") emits exactly one file per
-        # batch (repartition("b") first so each batch is one task's
-        # output), moved/mtime-staged exactly as before.
+        # The intake slices come from ONE docs scan broadcast-joined
+        # to the 4-row fixture map (a per-request union of docs
+        # filters put 9 scan branches under the staging coalesce(1)
+        # task); applied marks are a local relation; `b` tags each
+        # event with its micro-batch. Both local relations are ONE
+        # slice: a list createDataFrame slices into defaultParallelism
+        # Python-decoded partitions, which the coalesce(1) staging
+        # task would decode one after another (~6 s per batch).
+        def local(rows, schema):
+            return spark.createDataFrame(
+                spark.sparkContext.parallelize(rows, 1), schema
+            )
+
         fix_rows = [
             (i, rid, int(its), 0 if its <= _SLA_STREAM_SPLIT else 1)
             for i, (rid, (its, _marks)) in enumerate(
                 sorted(_SLA_FIXTURE.items())
             )
         ]
-        fix_df = spark.createDataFrame(
+        fix_df = local(
             fix_rows, "i int, request_id string, event_ts long, b int"
         )
         intakes = (
@@ -3256,50 +3245,30 @@ def q_streaming_erasure_sla_monitor(spark, sf_dir):
             for rid, (_its, marks) in sorted(_SLA_FIXTURE.items())
             for art, ats in sorted(marks.items())
         ]
-        applied_df = spark.createDataFrame(
-            applied_rows, ev_schema + ", b int"
-        )
-        stage = f"{work}/stage"
-        (
-            intakes.unionByName(applied_df)
-            .repartition("b")
-            .write.mode("overwrite")
-            .partitionBy("b")
-            .parquet(stage)
-        )
-        for b in (0, 1):
-            part = _glob.glob(f"{stage}/b={b}/part-*.parquet")[0]
-            dst = f"{in_dir}/b{b}.parquet"
-            shutil.move(part, dst)
-            _os.utime(dst, (base_t + 10 * b, base_t + 10 * b))
-        _ph1 = _time.monotonic()
-        stream = (
-            spark.readStream.schema(ev_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
+        applied_df = local(applied_rows, ev_schema + ", b int")
+        events = intakes.unionByName(applied_df)
+        stream = run.stream(
+            spark,
+            [events.filter(F.col("b") == b).drop("b") for b in (0, 1)],
+            schema=ev_schema,
         )
         out_dir = f"{work}/out"
-        q = run_erasure_sla_stream(
-            spark,
-            stream,
-            f"{work}/ledger",
-            _SLA_DEADLINE,
-            out_dir,
-            f"{work}/ckpt",
+        run.drain(
+            run_erasure_sla_stream(
+                spark,
+                stream,
+                f"{work}/ledger",
+                _SLA_DEADLINE,
+                out_dir,
+                f"{work}/ckpt",
+            ),
+            "erasure SLA",
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "erasure SLA stream did not drain within 300 s"
-                + (f": {q.exception()}" if q.exception() else "")
-            )
-        _ph2 = _time.monotonic()
-        _record_phases("streaming_erasure_sla_monitor", _ph0, _ph1, _ph2)
         out = (
             spark.read.option(
-                "basePath", _os.path.join(out_dir, "sla")
+                "basePath", os.path.join(out_dir, "sla")
             )
-            .parquet(_os.path.join(out_dir, "sla"))
+            .parquet(os.path.join(out_dir, "sla"))
             .withColumn(
                 "batch_id", F.col("batch_id").cast("long")
             )
@@ -3319,8 +3288,6 @@ def q_streaming_erasure_sla_monitor(spark, sf_dir):
         return _publish_result(
             spark, out, "streaming_erasure_sla_monitor"
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 _PROV_TERM = (
@@ -3357,7 +3324,7 @@ SELECT * FROM (
 ) ORDER BY artifact""",
 )
 def q_artifact_provenance_audit(spark, sf_dir):
-    """Artifact provenance / version-skew audit (VERDICT r8 seam:
+    """Artifact provenance / version-skew audit (the seam:
     the maintained artifacts are built independently with nothing
     proving they reflect the same corpus version, and nothing
     detecting staleness after a corpus revision). Every pipeline run
@@ -3380,9 +3347,6 @@ def q_artifact_provenance_audit(spark, sf_dir):
     jobs. Cites reference scope: the reference pipeline has no
     artifact lifecycle at all (Real_Time_Data.py writes sinks blind);
     extension tier."""
-    import shutil
-    import tempfile
-
     from ..operators import governance as gov
     from ..streaming.pipeline import (
         build_manifest_artifact,
@@ -3394,8 +3358,7 @@ def q_artifact_provenance_audit(spark, sf_dir):
     v_now, n_now = gov.corpus_version_scalar(docs)
     v_stale, n_stale = gov.corpus_version_scalar(stale)
 
-    work = tempfile.mkdtemp(prefix="prov_audit_")
-    try:
+    with _work_dir("prov_audit_") as work:
         mpath = f"{work}/manifest"
         build_manifest_artifact(docs, mpath)
         gov.stamp_provenance(mpath, "shard_manifest", v_now, n_now)
@@ -3421,8 +3384,6 @@ def q_artifact_provenance_audit(spark, sf_dir):
             docs,
         ).orderBy("artifact")
         return _publish_result(spark, audit, "artifact_provenance_audit")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(
@@ -3465,9 +3426,6 @@ def q_provenance_incremental_audit(spark, sf_dir):
     the in-place fold is for the batch revision pipeline, not a
     stream (a replayed delta would xor-cancel — the manifest
     stream's bookkept-segments lesson)."""
-    import shutil
-    import tempfile
-
     from ..operators import governance as gov
     from ..streaming.pipeline import (
         build_manifest_artifact,
@@ -3481,8 +3439,7 @@ def q_provenance_incremental_audit(spark, sf_dir):
     removes = corpus0.filter(F.col("doc_id") % 9 == 5)
     v0, n0 = gov.corpus_version_scalar(corpus0)
 
-    work = tempfile.mkdtemp(prefix="prov_incr_")
-    try:
+    with _work_dir("prov_incr_") as work:
         mpath = f"{work}/manifest"
         build_manifest_artifact(corpus0, mpath)
         gov.stamp_provenance(mpath, "shard_manifest", v0, n0)
@@ -3506,8 +3463,6 @@ def q_provenance_incremental_audit(spark, sf_dir):
             final_corpus,
         ).orderBy("artifact")
         return _publish_result(spark, audit, "provenance_incremental_audit")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def _manifest_epoch_sql(epoch: int, where: str) -> str:
@@ -3559,9 +3514,6 @@ def q_shard_manifest_time_travel(spark, sf_dir):
     Scale shape: retention is two renames per compaction; the as-of
     fold is |shards|-sized like the live read; vacuum_snapshots is
     the expire-snapshots knob (pytest covers it)."""
-    import shutil
-    import tempfile
-
     from ..streaming.pipeline import (
         build_manifest_artifact,
         manifest_add_batch,
@@ -3577,8 +3529,7 @@ def q_shard_manifest_time_travel(spark, sf_dir):
     b2 = docs.filter(F.col("doc_id") % 4 == 2)
     removes = corpus0.filter(F.col("doc_id") % 9 == 5)
 
-    work = tempfile.mkdtemp(prefix="manifest_tt_")
-    try:
+    with _work_dir("manifest_tt_") as work:
         mpath = f"{work}/manifest"
         build_manifest_artifact(corpus0, mpath)
         manifest_add_batch(spark, mpath, b1, 1)
@@ -3614,8 +3565,6 @@ def q_shard_manifest_time_travel(spark, sf_dir):
             .orderBy("epoch", "shard")
         )
         return _publish_result(spark, out, "shard_manifest_time_travel")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(
@@ -3656,9 +3605,6 @@ def q_snapshot_erasure_audit(spark, sf_dir):
     |shards|- or chain-sized snapshot folds against the request-sized
     subject set; the drop is one rmtree. Extension tier (the
     reference has no artifacts, no snapshots, no erasure)."""
-    import shutil
-    import tempfile
-
     from ..operators import artifact_lifecycle as alc
     from ..streaming.pipeline import (
         build_sft_prefix_index,
@@ -3676,8 +3622,7 @@ def q_snapshot_erasure_audit(spark, sf_dir):
     b1 = as_prompt(docs.filter(F.col("doc_id") % 4 == 1))
     subj = corpus.filter(F.col("doc_id") % 7 == 2).select("doc_id")
 
-    work = tempfile.mkdtemp(prefix="snap_erase_")
-    try:
+    with _work_dir("snap_erase_") as work:
         pfx = f"{work}/pfx"
         build_sft_prefix_index(corpus, pfx)
         from ..operators.text import sft_prefix_digests
@@ -3723,8 +3668,6 @@ def q_snapshot_erasure_audit(spark, sf_dir):
             "epoch long, retained_before long, n_referencing_before "
             "long, retained_after long, n_referencing_after long",
         ).orderBy("epoch")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(
@@ -3748,7 +3691,7 @@ SELECT * FROM (
 ) ORDER BY epoch_seq""",
 )
 def q_snapshot_retention_enforce(spark, sf_dir):
-    """RETENTION-POLICY ENFORCEMENT closure (VERDICT r9 ask #4):
+    """RETENTION-POLICY ENFORCEMENT closure:
     retention_policy_audit reports what sits past the horizon and
     drop_snapshot/vacuum_snapshots exist — this query registers the
     LOOP: snapshots past the keep-newest-K policy → targeted drops
@@ -3771,9 +3714,6 @@ def q_snapshot_retention_enforce(spark, sf_dir):
     set; the enforcement is rename/rmtree-only metadata work —
     no data rewrite at any scale. Extension tier (the reference has
     no artifacts, snapshots, or retention policy)."""
-    import shutil
-    import tempfile
-
     from ..operators import artifact_lifecycle as alc
     from ..operators.text import sft_prefix_digests
     from ..streaming.pipeline import (
@@ -3793,8 +3733,7 @@ def q_snapshot_retention_enforce(spark, sf_dir):
     b2 = as_prompt(docs.filter(F.col("doc_id") % 4 == 2))
     subj = corpus.filter(F.col("doc_id") % 7 == 2).select("doc_id")
 
-    work = tempfile.mkdtemp(prefix="snap_retain_")
-    try:
+    with _work_dir("snap_retain_") as work:
         pfx = f"{work}/pfx"
         build_sft_prefix_index(corpus, pfx)
         sft_prefix_digests(b1).write.parquet(f"{pfx}/adds/batch_id=1")
@@ -3848,8 +3787,6 @@ def q_snapshot_retention_enforce(spark, sf_dir):
             "n_referencing_before long, retained_after long, "
             "past_retention_after long, n_referencing_after long",
         ).orderBy("epoch_seq")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(
@@ -3896,13 +3833,6 @@ def q_streaming_erase_requests(spark, sf_dir):
     (human-scale); every erase is a request-sized segment write;
     audit counts are broadcast semi-joins against request-sized
     sets."""
-    import glob as _glob
-    import shutil
-    import tempfile
-    import time as _time
-
-    import os as _os
-
     from ..operators import governance as gov
     from ..streaming.pipeline import (
         _manifest_shard_rows,
@@ -3925,82 +3855,72 @@ def q_streaming_erase_requests(spark, sf_dir):
         "reqB": corpus.filter(F.col("doc_id") % 14 == 8).select("doc_id"),
     }
 
-    work = tempfile.mkdtemp(prefix="erase_req_stream_")
     try:
-        mpath, pfx, led = f"{work}/m", f"{work}/pfx", f"{work}/led"
-        build_manifest_artifact(corpus, mpath)
-        build_sft_prefix_index(prompts, pfx)
-        appliers = {
-            "shard_manifest": lambda ids: manifest_erase(
+        with _stream_run(
+            "streaming_erase_requests", "erase_req_stream_"
+        ) as run:
+            work = run.work
+            mpath, pfx, led = f"{work}/m", f"{work}/pfx", f"{work}/led"
+            build_manifest_artifact(corpus, mpath)
+            build_sft_prefix_index(prompts, pfx)
+            appliers = {
+                "shard_manifest": lambda ids: manifest_erase(
+                    spark,
+                    mpath,
+                    corpus.join(F.broadcast(ids), "doc_id", "left_semi"),
+                ),
+                "sft_prefix_index": lambda ids: sft_prefix_index_erase(
+                    spark, pfx, ids
+                ),
+            }
+            stream = run.stream(
                 spark,
-                mpath,
-                corpus.join(F.broadcast(ids), "doc_id", "left_semi"),
-            ),
-            "sft_prefix_index": lambda ids: sft_prefix_index_erase(
-                spark, pfx, ids
-            ),
-        }
-        in_dir = f"{work}/in"
-        _os.makedirs(in_dir)
-        base_t = _time.time()
-        for i, rid in enumerate(sorted(reqs)):
-            stage = f"{work}/stage_{i}"
-            reqs[rid].select(
-                F.lit(rid).alias("request_id"), "doc_id"
-            ).coalesce(1).write.mode("overwrite").parquet(stage)
-            part = _glob.glob(f"{stage}/part-*.parquet")[0]
-            dst = f"{in_dir}/b{i}.parquet"
-            shutil.move(part, dst)
-            _os.utime(dst, (base_t + 10 * i, base_t + 10 * i))
-        stream = (
-            spark.readStream.schema("request_id string, doc_id long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
-        q = run_erase_request_stream(
-            spark, stream, led, appliers, f"{work}/ckpt"
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "erase-request stream did not drain within 300 s"
-                + (f": {q.exception()}" if q.exception() else "")
+                [
+                    reqs[rid].select(F.lit(rid).alias("request_id"), "doc_id")
+                    for rid in sorted(reqs)
+                ],
+                schema="request_id string, doc_id long",
+            )
+            run.drain(
+                run_erase_request_stream(
+                    spark, stream, led, appliers, f"{work}/ckpt"
+                ),
+                "erase-request",
             )
 
-        applied = {
-            (r.request_id, r.artifact): int(r.applied)
-            for r in gov.erase_request_status(
-                spark, led, artifacts=tuple(sorted(appliers))
-            ).collect()
-        }
-        all_subj = reqs["reqA"].unionByName(reqs["reqB"])
-        n_ref = {}
-        n_ref["sft_prefix_index"] = int(
-            read_sft_prefix_index(spark, pfx)
-            .join(F.broadcast(all_subj), "doc_id", "left_semi")
-            .count()
-        )
-        survivors = corpus.join(
-            F.broadcast(all_subj), "doc_id", "left_anti"
-        )
-        served = read_manifest_serving(spark, mpath)
-        want = _manifest_shard_rows(survivors)
-        n_ref["shard_manifest"] = int(
-            served.unionByName(want)
-            .groupBy("shard", "n_docs", "n_tokens", "content_xor")
-            .count()
-            .filter(F.col("count") != 2)
-            .count()
-        )
-        n_subj = {rid: int(df.count()) for rid, df in reqs.items()}
-        rows = [
-            (rid, art, n_subj[rid], applied[(rid, art)], n_ref[art])
-            for rid in sorted(reqs)
-            for art in sorted(appliers)
-        ]
+            applied = {
+                (r.request_id, r.artifact): int(r.applied)
+                for r in gov.erase_request_status(
+                    spark, led, artifacts=tuple(sorted(appliers))
+                ).collect()
+            }
+            all_subj = reqs["reqA"].unionByName(reqs["reqB"])
+            n_ref = {}
+            n_ref["sft_prefix_index"] = int(
+                read_sft_prefix_index(spark, pfx)
+                .join(F.broadcast(all_subj), "doc_id", "left_semi")
+                .count()
+            )
+            survivors = corpus.join(
+                F.broadcast(all_subj), "doc_id", "left_anti"
+            )
+            served = read_manifest_serving(spark, mpath)
+            want = _manifest_shard_rows(survivors)
+            n_ref["shard_manifest"] = int(
+                served.unionByName(want)
+                .groupBy("shard", "n_docs", "n_tokens", "content_xor")
+                .count()
+                .filter(F.col("count") != 2)
+                .count()
+            )
+            n_subj = {rid: int(df.count()) for rid, df in reqs.items()}
+            rows = [
+                (rid, art, n_subj[rid], applied[(rid, art)], n_ref[art])
+                for rid in sorted(reqs)
+                for art in sorted(appliers)
+            ]
     finally:
         corpus.unpersist()
-        shutil.rmtree(work, ignore_errors=True)
     return spark.createDataFrame(
         rows,
         "request_id string, artifact string, n_subjects long, "
@@ -4165,14 +4085,6 @@ def q_streaming_ingest_fanout(spark, sf_dir):
     one per-doc window chain (prefix digests), one CDC chunk
     aggregate — all map-side-combinable; segments are batch-sized
     writes; the final compare folds artifact-sized relations only."""
-    import glob as _glob
-    import shutil
-    import tempfile
-    import time as _time
-
-    import os as _os
-
-    from ..operators.text import sft_prefix_digests
     from ..streaming.pipeline import (
         build_chunk_digest_index,
         build_manifest_artifact,
@@ -4188,13 +4100,12 @@ def q_streaming_ingest_fanout(spark, sf_dir):
     b1 = docs.filter(F.col("doc_id") % 4 == 1)
     b2 = docs.filter(F.col("doc_id") % 4 == 2)
 
-    work = tempfile.mkdtemp(prefix="ingest_fanout_")
-    try:
-        _ph0 = _time.monotonic()
+    with _stream_run("streaming_ingest_fanout", "ingest_fanout_") as run:
+        work = run.work
         mpath, pfx, cidx = f"{work}/m", f"{work}/pfx", f"{work}/cidx"
         # the three seed builds are independent pipelines over
-        # disjoint dirs — overlap them (guide §2.6; r12: the serial
-        # chain left the box idle through each build's barriers)
+        # disjoint dirs — overlap them (a serial chain leaves the box
+        # idle through each build's barriers)
         from concurrent.futures import ThreadPoolExecutor as _TPE
 
         with _TPE(max_workers=3) as _pool:
@@ -4208,35 +4119,13 @@ def q_streaming_ingest_fanout(spark, sf_dir):
             )
             _b3 = _pool.submit(build_chunk_digest_index, corpus0, cidx)
             _b1.result(), _b2.result(), _b3.result()
-        in_dir = f"{work}/in"
-        _os.makedirs(in_dir)
-        base_t = _time.time()
-        for i, b in enumerate((b1, b2)):
-            stage = f"{work}/stage_{i}"
-            b.coalesce(1).write.mode("overwrite").parquet(stage)
-            part = _glob.glob(f"{stage}/part-*.parquet")[0]
-            dst = f"{in_dir}/b{i}.parquet"
-            shutil.move(part, dst)
-            _os.utime(dst, (base_t + 10 * i, base_t + 10 * i))
-        _ph1 = _time.monotonic()
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, text string, lang string, "
-                "source string, n_chars long"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
+        stream = run.stream(spark, (b1, b2))
+        run.drain(
+            run_ingest_fanout_stream(
+                spark, stream, mpath, pfx, cidx, f"{work}/ckpt"
+            ),
+            "ingest-fanout",
         )
-        q = run_ingest_fanout_stream(
-            spark, stream, mpath, pfx, cidx, f"{work}/ckpt"
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "ingest-fanout stream did not drain within 300 s"
-                + (f": {q.exception()}" if q.exception() else "")
-            )
-        _ph2 = _time.monotonic()
 
         # each artifact's audit stats fold into ONE aggregate job
         # (three separate count/sum/xor passes per artifact before —
@@ -4290,13 +4179,10 @@ def q_streaming_ingest_fanout(spark, sf_dir):
             ("sft_prefix_index", p_rows, p_docs, p_xor),
             ("shard_manifest", m_rows, m_docs, m_xor),
         ]
-        _record_phases("streaming_ingest_fanout", _ph0, _ph1, _ph2)
         return spark.createDataFrame(
             rows,
             "artifact string, n_rows long, n_refs long, value_xor long",
         ).orderBy("artifact")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query("simhash_signatures", _simhash_oracle())
@@ -4378,8 +4264,8 @@ def q_simhash_weighted_dupes(spark, sf_dir):
 
 @query(
     "embedding_near_dupes",
-    # zero-norm mirror of the engine's eps-clamped normalize (ADVICE
-    # r5): a zero vector has cosine 0 with everything, never NaN
+    # zero-norm mirror of the engine's eps-clamped normalize:
+    # a zero vector has cosine 0 with everything, never NaN
     """WITH emb AS (
          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
                 list_dot_product(CAST(embedding AS DOUBLE[]),
@@ -4452,7 +4338,7 @@ def q_curation_pipeline(spark, sf_dir):
         _curation_ckpt = None
     # fixture includes the planted de-spaced CJK docs: the curation
     # near-dedup stage runs on the funnel's DEFAULT lang-aware
-    # tokenizer (VERDICT r9 ask #3) and must catch them
+    # tokenizer and must catch them
     d = dedup.with_cjk_docs(_dupes_df(spark, sf_dir))
     step1 = dedup.exact_dedup(d).localCheckpoint(eager=False)
     _curation_ckpt = step1
@@ -4794,20 +4680,18 @@ def q_streaming_dedup_profiles(spark, sf_dir):
     at-least-once delivery shape), streamed through the curate chain
     and stateful dropDuplicates("id"). The deduped output must equal
     the batch profiles table exactly — which is the SQL oracle."""
-    import tempfile
-
     from ..streaming.pipeline import deduped_stream, read_envelope_file_stream
 
-    d = tempfile.mkdtemp(prefix="dedup_stream_")
     env = envelopes_from_customers(load_table(spark, sf_dir, "customer")).select(
         "value"
     )
-    env.write.mode("overwrite").text(d)
-    env.write.mode("append").text(d)
-    src = read_envelope_file_stream(spark, d)
-    return _run_to_memory(
-        deduped_stream(src).drop("event_time"), output_mode="append"
-    )
+    with _work_dir("dedup_stream_") as d:
+        env.write.mode("overwrite").text(d)
+        env.write.mode("append").text(d)
+        src = read_envelope_file_stream(spark, d)
+        return _run_to_memory(
+            deduped_stream(src).drop("event_time"), output_mode="append"
+        )
 
 
 @query(
@@ -4826,24 +4710,22 @@ def q_streaming_top_domains(spark, sf_dir):
     contract (each trigger re-emits the whole top-k). availableNow
     processes the feed as one batch, so the oracle is the batch
     top-domains SQL."""
-    import tempfile
-
     from ..functions.columns import email_domain
     from ..streaming.pipeline import curated_stream, read_envelope_file_stream
 
-    d = tempfile.mkdtemp(prefix="domains_stream_")
-    envelopes_from_customers(load_table(spark, sf_dir, "customer")).write.mode(
-        "overwrite"
-    ).text(d)
-    curated = curated_stream(read_envelope_file_stream(spark, d))
-    top = (
-        curated.select(email_domain(F.col("email")).alias("domain"))
-        .groupBy("domain")
-        .agg(F.count(F.lit(1)).alias("count"))
-        .orderBy(F.desc("count"), F.asc("domain"))
-        .limit(5)
-    )
-    return _run_to_memory(top, output_mode="complete")
+    with _work_dir("domains_stream_") as d:
+        envelopes_from_customers(
+            load_table(spark, sf_dir, "customer")
+        ).write.mode("overwrite").text(d)
+        curated = curated_stream(read_envelope_file_stream(spark, d))
+        top = (
+            curated.select(email_domain(F.col("email")).alias("domain"))
+            .groupBy("domain")
+            .agg(F.count(F.lit(1)).alias("count"))
+            .orderBy(F.desc("count"), F.asc("domain"))
+            .limit(5)
+        )
+        return _run_to_memory(top, output_mode="complete")
 
 
 @query(
@@ -5375,7 +5257,7 @@ def q_kmeans_assignments(spark, sf_dir):
 
 
 # ------------------------------------------------------------------
-# Serving-store maintenance (upsert / SCD2) + round-2 widening
+# Serving-store maintenance (upsert / SCD2)
 # ------------------------------------------------------------------
 
 _UPSERT_BASE = """,
@@ -5969,7 +5851,7 @@ def q_revenue_projection(spark, sf_dir):
 
     orders = _t(spark, sf_dir, "orders")
     # monthly revenue as EXACT integer cents (order-exact long sum —
-    # a double sum's merge order wobbles the last ulp; round-9 audit)
+    # a double sum's merge order wobbles the last ulp)
     monthly = orders.groupBy(
         F.date_trunc("month", "o_orderdate").alias("m")
     ).agg(
@@ -5992,7 +5874,7 @@ def q_revenue_projection(spark, sf_dir):
     # The recursion's parameters are ONE row of two doubles. Left as a
     # temp view, every recursion step's scalar subqueries re-executed
     # the params lineage — the full orders aggregation, twice per step
-    # (r12 profile: 166 jobs / 6.6 s warm for 13 output rows). Collect
+    # (profiled: 166 jobs / 6.6 s warm for 13 output rows). Collect
     # the row once (one job computes both aggregates) and inline the
     # doubles as literals: repr() round-trips IEEE doubles exactly and
     # the SQL parser reads them back to the identical bits, so the
@@ -7656,7 +7538,7 @@ def q_minhash_accuracy_report(spark, sf_dir):
     estimate vs exact shingle Jaccard over the LSH candidate pairs
     (mean/max absolute error — the n_hashes tuning measurement).
     Sample-first: deterministic md5-bucket sample (default 10%),
-    full corpus behind sample_pct=100 (VERDICT r3 #4)."""
+    full corpus behind sample_pct=100."""
     return dedup.minhash_accuracy_report(
         _dupes_df(spark, sf_dir), sample_pct=_MH_SAMPLE_PCT
     )
@@ -8664,7 +8546,7 @@ def q_hashed_doc_vectors(spark, sf_dir):
     return text.hashed_doc_vectors(_t(spark, sf_dir, "documents"))
 
 
-# percentile-bootstrap CI ranks shared with the operator (ADVICE r3)
+# percentile-bootstrap CI ranks shared with the operator
 _BS_LO, _BS_HI = analytics.bootstrap_ci_ranks(analytics.BOOTSTRAP_REPS)
 
 
@@ -9487,7 +9369,7 @@ def q_watermark_lag_audit(spark, sf_dir):
 )
 def q_content_defined_chunks(spark, sf_dir):
     """Content-defined chunking dedup audit on the DEFAULT
-    (language-aware) tokenizer (VERDICT r10 #1): md5-boundary word
+    (language-aware) tokenizer: md5-boundary word
     chunks for whitespace scripts, char rolling-hash chunks for the
     no-whitespace partition — digest-deduped across docs, the
     storage-layer dedup payoff measurement (shift-tolerant, unlike
@@ -10319,7 +10201,7 @@ def _ivfpq_tag(sf_dir: str, table: str = "embeddings") -> str:
     """Artifact cache key: corpus path PLUS a data fingerprint (every
     part-file's name, size, mtime) so a corpus regenerated in place
     — e.g. a rebuilt soak directory — invalidates the cached index
-    instead of silently serving stale codes (ADVICE r5)."""
+    instead of silently serving stale codes."""
     import hashlib as _h
     import os as _os
 
@@ -10344,7 +10226,7 @@ def _ivfpq_build_cached(spark, sf_dir, variant: str, build_fn):
     """Build-once artifact cache with an ATOMIC publish: build into a
     scratch dir, then os.rename into the final path — concurrent
     sessions either see the complete artifact or build their own
-    scratch copy; a half-written tree can never serve (ADVICE r5).
+    scratch copy; a half-written tree can never serve.
     `v1` tags the artifact format — bump on build-code changes."""
     import os as _os
     import shutil as _shutil
@@ -10789,7 +10671,7 @@ FROM sel ORDER BY n_probe, shortlist"""
     _ivfpq_idx_oracle(pop="SELECT * FROM emb", final=_ivfpq_tuning_final()),
 )
 def q_ivfpq_tuning_curve(spark, sf_dir):
-    """Close the ANN recall loop (VERDICT r4 ask #2): grid-evaluate
+    """Close the ANN recall loop: grid-evaluate
     (n_probe, shortlist) over the maintained index (base + added
     batch), decompose recall loss into cell vs ADC misses, and choose
     the cheapest config with recall >= target (else max recall). The
@@ -11139,46 +11021,20 @@ def q_streaming_pii_redact(spark, sf_dir):
     byte — the oracle IS pii_redact_documents'. The redaction is a
     narrow stateless JVM-regex map, so replay safety is the
     overwrite-by-batch device with no cross-batch state at all."""
-    import glob as _glob
-    import os as _os
-    import shutil
-    import tempfile
-    import time as _time
-
     from ..streaming.pipeline import run_pii_redact_stream
 
     pdocs = _piidocs_df(spark, sf_dir)
     b0 = pdocs.filter(F.col("doc_id") % 2 == 0)
     b1 = pdocs.filter(F.col("doc_id") % 2 == 1)
-    work = tempfile.mkdtemp(prefix="pii_stream_")
-    try:
-        in_dir = f"{work}/in"
-        _os.makedirs(in_dir)
-        base_t = _time.time()
-        for i, b in enumerate((b0, b1)):
-            stage = f"{work}/stage_{i}"
-            b.coalesce(1).write.mode("overwrite").parquet(stage)
-            part = _glob.glob(f"{stage}/part-*.parquet")[0]
-            dst = f"{in_dir}/b{i}.parquet"
-            shutil.move(part, dst)
-            _os.utime(dst, (base_t + 10 * i, base_t + 10 * i))
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, text string, lang string, "
-                "source string, n_chars long"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
+    with _stream_run("streaming_pii_redact", "pii_stream_") as run:
+        work = run.work
+        stream = run.stream(spark, (b0, b1))
+        run.drain(
+            run_pii_redact_stream(
+                spark, stream, f"{work}/redacted", f"{work}/ckpt"
+            ),
+            "pii-redact",
         )
-        q = run_pii_redact_stream(
-            spark, stream, f"{work}/redacted", f"{work}/ckpt"
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "pii-redact stream did not drain within 300 s"
-                + (f": {q.exception()}" if q.exception() else "")
-            )
         out = (
             spark.read.option("basePath", f"{work}/redacted")
             .parquet(f"{work}/redacted")
@@ -11188,8 +11044,6 @@ def q_streaming_pii_redact(spark, sf_dir):
             .orderBy("doc_id")
         )
         return _publish_result(spark, out, "pii_scan_report")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(
@@ -11241,7 +11095,7 @@ SELECT shard, n_docs, n_tokens, content_xor,
 FROM m ORDER BY shard""",
 )
 def q_manifest_packing_verify(spark, sf_dir):
-    """Manifest CONSUMER closure (round-9 ask #6): the maintained
+    """Manifest CONSUMER closure: the maintained
     manifest artifact (built as base + a batch-keyed adds segment,
     folded by the serving read) is verified against the LOADER's own
     view — sequence_packing_plan's per-shard doc/token counts under
@@ -11250,9 +11104,6 @@ def q_manifest_packing_verify(spark, sf_dir):
     report counts_match = xor_match = 1; the oracle recomputes both
     sides from the base table. pytest flips the row with a planted
     shard corruption."""
-    import shutil
-    import tempfile
-
     from ..streaming.pipeline import (
         _manifest_shard_rows,
         build_manifest_artifact,
@@ -11260,8 +11111,7 @@ def q_manifest_packing_verify(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="manifest_verify_")
-    try:
+    with _work_dir("manifest_verify_") as work:
         mpath = f"{work}/manifest"
         build_manifest_artifact(
             docs.filter(F.col("doc_id") % 3 != 0), mpath
@@ -11271,8 +11121,6 @@ def q_manifest_packing_verify(spark, sf_dir):
         ).write.parquet(f"{mpath}/adds/batch_id=1")
         out = manifest_packing_verify(spark, mpath, docs)
         return _publish_result(spark, out, "manifest_packing_verify")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(
@@ -11299,7 +11147,7 @@ FROM m ORDER BY shard""",
 )
 def q_manifest_packing_verify_lang_aware(spark, sf_dir):
     """The manifest consumer closure in the RECORDED lang-aware unit
-    (r12 — the token-budget migration's driver-window
+    (the token-budget migration's driver-window
     representative): the manifest artifact is BUILT with
     tokenizer='lang_aware' over the planted de-spaced CJK corpus
     (with_cjk_docs: every zh doc whitespace-free, like real CJK —
@@ -11311,9 +11159,6 @@ def q_manifest_packing_verify_lang_aware(spark, sf_dir):
     the loader agree on the honest unit end to end. The oracle
     recomputes the lang-aware per-shard fold from the same planted
     corpus."""
-    import shutil
-    import tempfile
-
     from ..streaming.pipeline import (
         _manifest_shard_rows,
         build_manifest_artifact,
@@ -11322,8 +11167,7 @@ def q_manifest_packing_verify_lang_aware(spark, sf_dir):
     )
 
     docs = dedup.with_cjk_docs(_t(spark, sf_dir, "documents"))
-    work = tempfile.mkdtemp(prefix="manifest_verify_la_")
-    try:
+    with _work_dir("manifest_verify_la_") as work:
         mpath = f"{work}/manifest"
         build_manifest_artifact(
             docs.filter(F.col("doc_id") % 3 != 0),
@@ -11338,8 +11182,6 @@ def q_manifest_packing_verify_lang_aware(spark, sf_dir):
         return _publish_result(
             spark, out, "manifest_packing_verify_lang_aware"
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 _MANIFEST_FOLD_SQL = f"""
@@ -11375,12 +11217,6 @@ def q_streaming_shard_manifest(spark, sf_dir):
     (batch-keyed segment overwrite, fold only at read/compaction) is
     mandatory; pytest replays from a fresh checkpoint and proves the
     artifact unchanged."""
-    import glob as _glob
-    import os as _os
-    import shutil
-    import tempfile
-    import time as _time
-
     from ..streaming.pipeline import (
         build_manifest_artifact,
         manifest_compact,
@@ -11394,46 +11230,22 @@ def q_streaming_shard_manifest(spark, sf_dir):
         (F.col("doc_id") >= 100000) & (F.col("doc_id") < 200000)
     )
     b1 = dupes.filter(F.col("doc_id") >= 200000)
-    work = tempfile.mkdtemp(prefix="manifest_stream_")
-    try:
-        _ph0 = _time.monotonic()
+    with _stream_run("streaming_shard_manifest", "manifest_stream_") as run:
+        work = run.work
         mpath = f"{work}/manifest"
         build_manifest_artifact(docs, mpath)
-        in_dir = f"{work}/in"
-        _os.makedirs(in_dir)
-        base_t = _time.time()
-        for i, b in enumerate((b0, b1)):
-            stage = f"{work}/stage_{i}"
-            b.coalesce(1).write.mode("overwrite").parquet(stage)
-            part = _glob.glob(f"{stage}/part-*.parquet")[0]
-            dst = f"{in_dir}/b{i}.parquet"
-            shutil.move(part, dst)
-            _os.utime(dst, (base_t + 10 * i, base_t + 10 * i))
-        _ph1 = _time.monotonic()
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, text string, lang string, "
-                "source string, n_chars long"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
+        stream = run.stream(spark, (b0, b1))
+        run.drain(
+            run_manifest_update_stream(
+                spark, stream, mpath, f"{work}/ckpt"
+            ),
+            "manifest-update",
         )
-        q = run_manifest_update_stream(spark, stream, mpath, f"{work}/ckpt")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "manifest-update stream did not drain within 300 s"
-                + (f": {q.exception()}" if q.exception() else "")
-            )
-        _ph2 = _time.monotonic()
         # compaction must not change the fold — serve from the
         # compacted base
         manifest_compact(spark, mpath)
         out = read_manifest_serving(spark, mpath).orderBy("shard")
-        _record_phases("streaming_shard_manifest", _ph0, _ph1, _ph2)
         return _publish_result(spark, out, "streaming_shard_manifest")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(
@@ -11453,9 +11265,6 @@ def q_shard_manifest_erase_serve(spark, sf_dir):
     helps instead of hurts) and the serving fold must equal the
     manifest rebuilt without them — governance now reaches all five
     maintained artifacts."""
-    import shutil
-    import tempfile
-
     from ..streaming.pipeline import (
         build_manifest_artifact,
         manifest_erase,
@@ -11470,15 +11279,12 @@ def q_shard_manifest_erase_serve(spark, sf_dir):
             == dedup.BAND_ERASE_RESIDUE
         )
     )
-    work = tempfile.mkdtemp(prefix="manifest_erase_")
-    try:
+    with _work_dir("manifest_erase_") as work:
         mpath = f"{work}/manifest"
         build_manifest_artifact(dupes, mpath)
         manifest_erase(spark, mpath, er_docs)
         out = read_manifest_serving(spark, mpath).orderBy("shard")
         return _publish_result(spark, out, "shard_manifest_erase_serve")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(
@@ -11670,20 +11476,13 @@ def q_streaming_boilerplate_scrub(spark, sf_dir):
     batch. Scrubbing is per-doc against frozen templates, so the
     streamed union must equal the one-shot batch scrub of the whole
     corpus — the oracle IS boilerplate_cleaned_docs'."""
-    import glob as _glob
-    import os as _os
-    import shutil
-    import tempfile
-    import time as _time
-
     from ..streaming.pipeline import run_boilerplate_scrub_stream
 
     tdocs = _tdocs_df(spark, sf_dir)
     b0 = tdocs.filter(F.col("doc_id") % 2 == 0)
     b1 = tdocs.filter(F.col("doc_id") % 2 == 1)
-    work = tempfile.mkdtemp(prefix="boiler_stream_")
-    try:
-        _ph0 = _time.monotonic()
+    with _stream_run("streaming_boilerplate_scrub", "boiler_stream_") as run:
+        work = run.work
         # the maintained template artifact from the build-once cache
         # — the stream only READS it (frozen broadcast templates), so
         # no invocation-local copy is needed; detection-once is the
@@ -11693,45 +11492,20 @@ def q_streaming_boilerplate_scrub(spark, sf_dir):
             "templateidx",
             lambda sc: text.write_template_index(tdocs, sc),
         )  # same cache _cached_templates serves the batch ops from
-        in_dir = f"{work}/in"
-        _os.makedirs(in_dir)
-        base_t = _time.time()
-        for i, b in enumerate((b0, b1)):
-            stage = f"{work}/stage_{i}"
-            b.coalesce(1).write.mode("overwrite").parquet(stage)
-            part = _glob.glob(f"{stage}/part-*.parquet")[0]
-            dst = f"{in_dir}/b{i}.parquet"
-            shutil.move(part, dst)
-            _os.utime(dst, (base_t + 10 * i, base_t + 10 * i))
-        _ph1 = _time.monotonic()
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, text string, lang string, "
-                "source string, n_chars long"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
+        stream = run.stream(spark, (b0, b1))
+        run.drain(
+            run_boilerplate_scrub_stream(
+                spark, stream, tidx, f"{work}/cleaned", f"{work}/ckpt"
+            ),
+            "boilerplate-scrub",
         )
-        q = run_boilerplate_scrub_stream(
-            spark, stream, tidx, f"{work}/cleaned", f"{work}/ckpt"
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "boilerplate-scrub stream did not drain within 300 s"
-                + (f": {q.exception()}" if q.exception() else "")
-            )
-        _ph2 = _time.monotonic()
         out = (
             spark.read.option("basePath", f"{work}/cleaned")
             .parquet(f"{work}/cleaned")
             .select("doc_id", "source", "cleaned_text")
             .orderBy("doc_id")
         )
-        _record_phases("streaming_boilerplate_scrub", _ph0, _ph1, _ph2)
         return _publish_result(spark, out, "streaming_boilerplate_scrub")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 _NOV_N = text.NOVELTY_NGRAM_WORDS
@@ -12172,7 +11946,7 @@ FROM wres w JOIN lres l ON l.seq_len = w.seq_len
 ORDER BY seq_len""",
 )
 def q_packing_unit_delta(spark, sf_dir):
-    """The token-unit migration's MEASUREMENT query (r12 — the
+    """The token-unit migration's MEASUREMENT query (the
     packing family's lang_dedup_delta_report): per context length,
     sequences and utilization under the whitespace vs lang-aware
     units, and the training sequences whitespace counting
@@ -12378,7 +12152,7 @@ SELECT doc_id, CAST(u_idx AS BIGINT) AS shared_depth, prefix_digest,
 FROM psh WHERE rn = 1 ORDER BY doc_id""",
 )
 def q_sft_prefix_dedup(spark, sf_dir):
-    """Multi-turn prompt-PREFIX dedup (round-9 ask #3): the fixture
+    """Multi-turn prompt-PREFIX dedup: the fixture
     plants forks sharing the FIRST user turn with a divergent second
     user turn — byte hashing and the whole-user-content digest both
     miss them; the cumulative per-turn digest chain reports each
@@ -12432,13 +12206,6 @@ def q_streaming_sft_prefix_gate(spark, sf_dir):
     from scratch over the full fixture. Replay-safe: batch-keyed
     overwrites + own-segment exclusion (pytest replays from a fresh
     checkpoint)."""
-    import glob as _glob
-    import shutil
-    import tempfile
-    import time as _time
-
-    import os as _os
-
     from ..streaming.pipeline import (
         build_sft_prefix_index,
         run_sft_prefix_gate_stream,
@@ -12451,40 +12218,17 @@ def q_streaming_sft_prefix_gate(spark, sf_dir):
         & (F.col("doc_id") < text.PREFIX_FORK_ID_OFFSET)
     )
     b1 = fixture.filter(F.col("doc_id") >= text.PREFIX_FORK_ID_OFFSET)
-    work = tempfile.mkdtemp(prefix="sft_prefix_gate_")
-    try:
-        _ph0 = _time.monotonic()
+    with _stream_run("streaming_sft_prefix_gate", "sft_prefix_gate_") as run:
+        work = run.work
         pidx = f"{work}/pidx"
         build_sft_prefix_index(corpus, pidx)
-        in_dir = f"{work}/in"
-        _os.makedirs(in_dir)
-        base_t = _time.time()
-        for i, b in enumerate((b0, b1)):
-            stage = f"{work}/stage_{i}"
-            b.coalesce(1).write.mode("overwrite").parquet(stage)
-            part = _glob.glob(f"{stage}/part-*.parquet")[0]
-            dst = f"{in_dir}/b{i}.parquet"
-            shutil.move(part, dst)
-            _os.utime(dst, (base_t + 10 * i, base_t + 10 * i))
-        _ph1 = _time.monotonic()
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, text string, lang string, "
-                "source string, n_chars long"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
+        stream = run.stream(spark, (b0, b1))
+        run.drain(
+            run_sft_prefix_gate_stream(
+                spark, stream, pidx, f"{work}/out", f"{work}/ckpt"
+            ),
+            "sft-prefix-gate",
         )
-        q = run_sft_prefix_gate_stream(
-            spark, stream, pidx, f"{work}/out", f"{work}/ckpt"
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "sft-prefix-gate stream did not drain within 300 s"
-                + (f": {q.exception()}" if q.exception() else "")
-            )
-        _ph2 = _time.monotonic()
         flags = spark.read.option(
             "basePath", f"{work}/out/flags"
         ).parquet(f"{work}/out/flags")
@@ -12494,10 +12238,7 @@ def q_streaming_sft_prefix_gate(spark, sf_dir):
             "shared_depth",
             "n_partners",
         ).orderBy("doc_id")
-        _record_phases("streaming_sft_prefix_gate", _ph0, _ph1, _ph2)
         return _publish_result(spark, out, "streaming_sft_prefix_gate")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(
@@ -12746,25 +12487,11 @@ def q_quality_model_filtered_counts(spark, sf_dir):
 def _docs_stream(spark, sf_dir):
     """File-stream over the documents table (the _events_stream
     device, minus the timestamp-flavor handling — documents has no
-    temporal column): a per-corpus symlink directory satisfies the
-    directory-source requirement."""
-    import hashlib
-    import os
-    import tempfile
-
+    temporal column)."""
     path = os.path.realpath(os.path.join(sf_dir, "documents.parquet"))
-    if os.path.isdir(path):
-        d = path
-    else:
-        tag = hashlib.md5(path.encode()).hexdigest()[:12]
-        d = os.path.join(tempfile.gettempdir(), f"docs_stream_{tag}")
-        os.makedirs(d, exist_ok=True)
-        link = os.path.join(d, "documents.parquet")
-        if not os.path.exists(link):
-            os.symlink(path, link)
-    return spark.readStream.schema(
-        "doc_id long, text string, lang string, source string, n_chars long"
-    ).parquet(d)
+    return spark.readStream.schema(DOC_STREAM_SCHEMA).parquet(
+        _stream_path(path)
+    )
 
 
 def _quality_model(spark, sf_dir):
@@ -12814,23 +12541,21 @@ def q_streaming_quality_gate(spark, sf_dir):
     kept table rolls up per source. The oracle replays train + score
     + gate in SQL — so a drift anywhere (featurizer, GD trajectory,
     scoring, gate threshold, sink) turns the row red."""
-    import shutil
-    import tempfile
-
-    from ..streaming.pipeline import run_quality_gate_stream
+    from ..streaming.pipeline import drain, run_quality_gate_stream
 
     w, t = _quality_model(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="quality_gate_")
-    try:
-        q = run_quality_gate_stream(
-            spark,
-            _docs_stream(spark, sf_dir),
-            w,
-            t,
-            f"{work}/kept",
-            f"{work}/ckpt",
+    with _work_dir("quality_gate_") as work:
+        drain(
+            run_quality_gate_stream(
+                spark,
+                _docs_stream(spark, sf_dir),
+                w,
+                t,
+                f"{work}/kept",
+                f"{work}/ckpt",
+            ),
+            "quality-gate",
         )
-        q.awaitTermination(300)
         out = (
             _rpp(spark, f"{work}/kept")
             .groupBy("source")
@@ -12843,8 +12568,6 @@ def q_streaming_quality_gate(spark, sf_dir):
             .orderBy("source")
         )
         return _publish_result(spark, out, "streaming_quality_gate")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 
@@ -13080,12 +12803,6 @@ def q_streaming_leakage_monitor(spark, sf_dir):
     BEFORE admission — per-batch ledgers of verified near-dup pairs
     against the training corpus (batch 0 = exact re-crawls, batch 1 =
     near copies). Oracle replays both batches' probes from scratch."""
-    import glob as _glob
-    import os as _os
-    import shutil
-    import tempfile
-    import time as _time
-
     from ..streaming.pipeline import run_near_dup_monitor_stream
 
     docs = _t(spark, sf_dir, "documents")
@@ -13095,38 +12812,15 @@ def q_streaming_leakage_monitor(spark, sf_dir):
     )
     b1 = dupes.filter(F.col("doc_id") >= 200000)
     index_path = _band_index_path(spark, sf_dir)  # read-only probe
-    work = tempfile.mkdtemp(prefix="leak_monitor_")
-    try:
-        _ph0 = _time.monotonic()
-        in_dir = f"{work}/in"
-        _os.makedirs(in_dir)
-        base_t = _time.time()
-        for i, b in enumerate((b0, b1)):
-            stage = f"{work}/stage_{i}"
-            b.coalesce(1).write.mode("overwrite").parquet(stage)
-            part = _glob.glob(f"{stage}/part-*.parquet")[0]
-            dst = f"{in_dir}/b{i}.parquet"
-            shutil.move(part, dst)
-            _os.utime(dst, (base_t + 10 * i, base_t + 10 * i))
-        _ph1 = _time.monotonic()
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, text string, lang string, "
-                "source string, n_chars long"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
+    with _stream_run("streaming_leakage_monitor", "leak_monitor_") as run:
+        work = run.work
+        stream = run.stream(spark, (b0, b1))
+        run.drain(
+            run_near_dup_monitor_stream(
+                spark, stream, index_path, docs, f"{work}/out", f"{work}/ckpt"
+            ),
+            "leakage-monitor",
         )
-        q = run_near_dup_monitor_stream(
-            spark, stream, index_path, docs, f"{work}/out", f"{work}/ckpt"
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "leakage-monitor stream did not drain within 300 s"
-                + (f": {q.exception()}" if q.exception() else "")
-            )
-        _ph2 = _time.monotonic()
         pairs = spark.read.option(
             "basePath", f"{work}/out/pairs"
         ).parquet(f"{work}/out/pairs")
@@ -13138,10 +12832,7 @@ def q_streaming_leakage_monitor(spark, sf_dir):
             )
             .orderBy("batch_id")
         )
-        _record_phases("streaming_leakage_monitor", _ph0, _ph1, _ph2)
         return _publish_result(spark, out, "streaming_leakage_monitor")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 _DECON_RECRAWL_BASE = 100_000  # planted re-crawl doc_id offset
@@ -13186,7 +12877,7 @@ GROUP BY t.batch_id, t.source
 ORDER BY batch_id, source""",
 )
 def q_streaming_decontamination_gate(spark, sf_dir):
-    """The decontamination family's STREAMING twin (r12 — the last
+    """The decontamination family's STREAMING twin (the last
     curation family without an ingest-time mode): candidate training
     docs arrive as micro-batches and are probed against the
     broadcast benchmark 13-gram set BEFORE admission
@@ -13205,12 +12896,6 @@ def q_streaming_decontamination_gate(spark, sf_dir):
     BROADCAST into every batch's semi-join; per-batch cost is the
     batch's n-gram fan-out + per-source aggregate, O(|batch|); the
     corpus is never shuffled on the gram key."""
-    import glob as _glob
-    import os as _os
-    import shutil
-    import tempfile
-    import time as _time
-
     from ..streaming.pipeline import run_decontamination_stream
 
     docs = _t(spark, sf_dir, "documents")
@@ -13227,62 +12912,40 @@ def q_streaming_decontamination_gate(spark, sf_dir):
             "n_chars",
         )
     )
-    work = tempfile.mkdtemp(prefix="decon_gate_")
     bench_grams = text.benchmark_gram_set(docs).persist()
     try:
-        _ph0 = _time.monotonic()
-        in_dir = f"{work}/in"
-        _os.makedirs(in_dir)
-        base_t = _time.time()
-        for i, rel in enumerate((b0, b1)):
-            stage = f"{work}/stage_{i}"
-            rel.coalesce(1).write.mode("overwrite").parquet(stage)
-            part = _glob.glob(f"{stage}/part-*.parquet")[0]
-            dst = f"{in_dir}/b{i}.parquet"
-            shutil.move(part, dst)
-            _os.utime(dst, (base_t + 10 * i, base_t + 10 * i))
-        _ph1 = _time.monotonic()
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, text string, lang string, "
-                "source string, n_chars long"
+        with _stream_run(
+            "streaming_decontamination_gate", "decon_gate_"
+        ) as run:
+            work = run.work
+            stream = run.stream(spark, (b0, b1))
+            run.drain(
+                run_decontamination_stream(
+                    spark,
+                    stream,
+                    bench_grams,
+                    f"{work}/out",
+                    f"{work}/ckpt",
+                ),
+                "decontamination",
             )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
-        q = run_decontamination_stream(
-            spark,
-            stream,
-            bench_grams,
-            f"{work}/out",
-            f"{work}/ckpt",
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "decontamination stream did not drain within 300 s"
-                + (f": {q.exception()}" if q.exception() else "")
+            out = (
+                spark.read.option("basePath", f"{work}/out/report")
+                .parquet(f"{work}/out/report")
+                .select(
+                    F.col("batch_id").cast("long").alias("batch_id"),
+                    "source",
+                    "n_docs",
+                    "n_contaminated",
+                    "contamination_rate",
+                )
+                .orderBy("batch_id", "source")
             )
-        _ph2 = _time.monotonic()
-        _record_phases("streaming_decontamination_gate", _ph0, _ph1, _ph2)
-        out = (
-            spark.read.option("basePath", f"{work}/out/report")
-            .parquet(f"{work}/out/report")
-            .select(
-                F.col("batch_id").cast("long").alias("batch_id"),
-                "source",
-                "n_docs",
-                "n_contaminated",
-                "contamination_rate",
+            return _publish_result(
+                spark, out, "streaming_decontamination_gate"
             )
-            .orderBy("batch_id", "source")
-        )
-        return _publish_result(
-            spark, out, "streaming_decontamination_gate"
-        )
     finally:
         bench_grams.unpersist()
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(
@@ -13495,7 +13158,7 @@ GROUP BY d.source ORDER BY d.source"""
 def q_chunk_dedup_report(spark, sf_dir):
     """Chunk-level exact-substring dedup with document
     reconstruction, on its DEFAULT (language-aware) tokenizer over a
-    fixture where the default matters (VERDICT r10 #1): synthetic
+    fixture where the default matters: synthetic
     dupes ∪ planted de-spaced CJK docs with PREFIX-SHIFTED
     duplicates. The whitespace chunker sees each de-spaced doc as
     one word → one whole-doc chunk, so the shifted duplicate shares
@@ -13829,7 +13492,7 @@ def _link_cached_chunk_base(spark, sf_dir, docs, index_path) -> None:
     # record the build tokenizer explicitly (the cached base predates
     # or omits the meta — it was built whitespace, the default);
     # tmp + os.replace like build_chunk_digest_index's publish
-    # (ADVICE r11 low: a crash mid-write left a truncated meta that
+    # (a crash mid-write left a truncated meta that
     # chunk_index_tokenizer would fail to json-load)
     import json as _json
 
@@ -13871,14 +13534,11 @@ def q_chunk_index_gc_report(spark, sf_dir):
     alive by surviving sharers. Oracle replays the chunk relation and
     the refcount arithmetic from scratch."""
     import os as _os
-    import shutil
-    import tempfile
 
     from ..streaming.pipeline import chunk_index_erase
 
     docs = _t(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="chunk_gc_")
-    try:
+    with _work_dir("chunk_gc_") as work:
         index_path = f"{work}/idx"
         _link_cached_chunk_base(spark, sf_dir, docs, index_path)
         erased = docs.filter(
@@ -13928,8 +13588,6 @@ def q_chunk_index_gc_report(spark, sf_dir):
             .alias("dead_ppm"),
         )
         return _publish_result(spark, out, "chunk_index_gc_report")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(
@@ -13964,15 +13622,7 @@ def q_streaming_chunk_dedup(spark, sf_dir):
     its content entered the index via batch 0's adds segment,
     proving the maintained index grows between micro-batches. The
     oracle replays the cumulative index growth in SQL."""
-    import glob as _glob
-    import shutil
-    import tempfile
-    import time as _time
-
-    from ..streaming.pipeline import (
-        build_chunk_digest_index,
-        run_chunk_dedup_stream,
-    )
+    from ..streaming.pipeline import run_chunk_dedup_stream
 
     docs = _t(spark, sf_dir, "documents")
     dupes = dedup.with_synthetic_dupes(docs)
@@ -13985,45 +13635,17 @@ def q_streaming_chunk_dedup(spark, sf_dir):
     b0 = dupes.filter(F.col("doc_id") >= 100000).unionByName(near_twins)
     b1 = b0.withColumn("doc_id", F.col("doc_id") + 400000)
 
-    work = tempfile.mkdtemp(prefix="chunk_stream_")
-    try:
-        _ph0 = _time.monotonic()
-        import os as _os
-
+    with _stream_run("streaming_chunk_dedup", "chunk_stream_") as run:
+        work = run.work
         index_path = f"{work}/idx"
         _link_cached_chunk_base(spark, sf_dir, docs, index_path)
-        in_dir = f"{work}/in"
-        _os.makedirs(in_dir)
-        base_t = _time.time()
-        for i, b in enumerate((b0, b1)):
-            stage = f"{work}/stage_{i}"
-            b.coalesce(1).write.mode("overwrite").parquet(stage)
-            part = _glob.glob(f"{stage}/part-*.parquet")[0]
-            dst = f"{in_dir}/b{i}.parquet"
-            shutil.move(part, dst)
-            _os.utime(dst, (base_t + 10 * i, base_t + 10 * i))
-        _ph1 = _time.monotonic()
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, text string, lang string, "
-                "source string, n_chars long"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
+        stream = run.stream(spark, (b0, b1))
+        run.drain(
+            run_chunk_dedup_stream(
+                spark, stream, index_path, f"{work}/ckpt"
+            ),
+            "chunk-dedup",
         )
-        q = run_chunk_dedup_stream(
-            spark, stream, index_path, f"{work}/ckpt"
-        )
-        # awaitTermination returns False on timeout — reading the
-        # ledgers then (and rmtree'ing the work dir under the live
-        # query) would yield silently partial results
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "chunk-dedup stream did not drain within 300 s"
-                + (f": {q.exception()}" if q.exception() else "")
-            )
-        _ph2 = _time.monotonic()
         ledgers = spark.read.option(
             "basePath", f"{index_path}/ledger"
         ).parquet(f"{index_path}/ledger")
@@ -14038,10 +13660,7 @@ def q_streaming_chunk_dedup(spark, sf_dir):
             )
             .orderBy("batch_id")
         )
-        _record_phases("streaming_chunk_dedup", _ph0, _ph1, _ph2)
         return _publish_result(spark, out, "streaming_chunk_dedup")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(
@@ -14073,7 +13692,7 @@ GROUP BY doc_id ORDER BY doc_id""",
 )
 def q_lang_chunk_index_probe(spark, sf_dir):
     """The honest tokenizer reaching the MAINTAINED chunk-digest
-    artifact (VERDICT r10 #1, the band-index pattern completed): the
+    artifact (the band-index pattern completed): the
     chunking tokenizer is a recorded artifact parameter
     (`_tokenizer.json`, chunk_index_tokenizer) and every add/probe/
     erase path reads it. A lang-aware index is built over the

@@ -127,10 +127,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TPCH_TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Expose the corpus as SQL views so every engine query also runs
     via ``spark.sql``."""

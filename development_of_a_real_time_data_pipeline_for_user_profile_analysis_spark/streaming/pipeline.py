@@ -41,6 +41,38 @@ def _rp(spark: SparkSession, *paths: str) -> DataFrame:
     return read_parquet_pinned(spark, *paths)
 
 
+DRAIN_TIMEOUT_S = 300
+
+
+def start_gate(stream: DataFrame, gate, checkpoint_dir: str):
+    """Start `gate(batch_df, batch_id)` as the foreachBatch sink of
+    `stream`: append mode, one checkpoint, and the availableNow
+    trigger — drain what the source holds now, then stop. Every
+    gate's writes are keyed by batch id, so at-least-once replay from
+    the checkpoint is harmless."""
+    return (
+        stream.writeStream.outputMode("append")
+        .option("checkpointLocation", checkpoint_dir)
+        .foreachBatch(gate)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def drain(q, what: str) -> None:
+    """Wait for the availableNow query `q` to finish. On timeout
+    awaitTermination returns False instead of raising, and a sink
+    read then would be silently partial — so stop the query and raise
+    TimeoutError naming the stream `what` and the query's error, if
+    any. A query that failed raises its StreamingQueryException."""
+    if not q.awaitTermination(DRAIN_TIMEOUT_S):
+        q.stop()
+        err = q.exception()
+        raise TimeoutError(
+            f"{what} stream did not drain within {DRAIN_TIMEOUT_S} s"
+            + (f": {err}" if err else "")
+        )
+
 
 def read_envelope_file_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int | None = None
@@ -257,12 +289,10 @@ def run_ivfpq_add_stream(
     vector_stream: DataFrame,
     index_path: str,
     checkpoint_dir: str,
-    available_now: bool = True,
-    processing_time: str | None = None,
     timings: list | None = None,
 ):
-    """Streaming maintenance of the IVF-PQ index artifact (VERDICT r5
-    ask #3): each micro-batch of (vec_id, embedding) rows encodes
+    """Streaming maintenance of the IVF-PQ index artifact: each
+    micro-batch of (vec_id, embedding) rows encodes
     against the artifact's FROZEN quantizers (read once at start —
     broadcast-sized, never retrained) and publishes its codes as an
     L0 segment `codes_adds/batch_id=N`, cell-partitioned like the
@@ -302,16 +332,7 @@ def run_ivfpq_add_stream(
         if timings is not None:
             timings.append((batch_id, n, time.monotonic() - t0))
 
-    writer = (
-        vector_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(add_batch)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    return start_gate(vector_stream, add_batch, checkpoint_dir)
 
 
 def run_ivfpq_erase_stream(
@@ -319,8 +340,6 @@ def run_ivfpq_erase_stream(
     id_stream: DataFrame,
     index_path: str,
     checkpoint_dir: str,
-    available_now: bool = True,
-    processing_time: str | None = None,
     timings: list | None = None,
 ):
     """Streaming right-to-be-forgotten against the maintained IVF-PQ
@@ -361,16 +380,7 @@ def run_ivfpq_erase_stream(
         if timings is not None:
             timings.append((batch_id, n, time.monotonic() - t0))
 
-    writer = (
-        id_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(erase_batch)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    return start_gate(id_stream, erase_batch, checkpoint_dir)
 
 
 def deduped_stream(source: DataFrame, watermark_delay: str = "1 hour") -> DataFrame:
@@ -631,7 +641,6 @@ def run_quality_gate_stream(
     threshold: int,
     kept_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
     timings: list | None = None,
 ):
     """Streaming quality gate under the TRAINED model — the serving
@@ -677,14 +686,7 @@ def run_quality_gate_stream(
             ).count()
             timings.append((batch_id, n_in, n_kept, time.monotonic() - t0))
 
-    writer = (
-        doc_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(gate)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_gate(doc_stream, gate, checkpoint_dir)
 
 
 # ------------------------------------------------------------------
@@ -850,8 +852,6 @@ def run_chunk_dedup_stream(
     doc_stream: DataFrame,
     index_path: str,
     checkpoint_dir: str,
-    available_now: bool = True,
-    processing_time: str | None = None,
     timings: list | None = None,
 ):
     """Streaming chunk-substring dedup: each micro-batch of documents
@@ -901,7 +901,7 @@ def run_chunk_dedup_stream(
                         tokenizer=chunk_index_tokenizer(index_path),
                     ),
                 ).persist()
-                # (r12: threading these three writes A/B'd a wash —
+                # (threading these three writes A/B'd a wash —
                 # sub-0.5 s jobs; see the decontamination gate note)
                 dedup.ledger_from_marked(marked).write.mode(
                     "overwrite"
@@ -938,16 +938,7 @@ def run_chunk_dedup_stream(
         if timings is not None:
             timings.append((batch_id, n, time.monotonic() - t0))
 
-    writer = (
-        doc_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(gate)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    return start_gate(doc_stream, gate, checkpoint_dir)
 
 
 def chunk_index_erase(
@@ -1270,7 +1261,6 @@ def run_near_dup_monitor_stream(
     out_dir: str,
     checkpoint_dir: str,
     jaccard_threshold: float = 0.6,
-    available_now: bool = True,
     timings: list | None = None,
 ):
     """Streaming near-dup LEAKAGE MONITOR: every micro-batch of
@@ -1297,7 +1287,7 @@ def run_near_dup_monitor_stream(
 
     # the probed corpus is STATIC across the stream — shingle it once
     # (eager ckpt in the bounded FIFO) instead of 3× per micro-batch
-    # inside every probe's verify (r12; see incremental_near_dups_
+    # inside every probe's verify (see incremental_near_dups_
     # indexed's corpus_sh contract: batch doc_ids are disjoint from
     # the corpus here — the monitor admits NEW ids by construction)
     while len(dedup._sh_ckpt_cache) >= dedup._SH_CKPT_KEEP:
@@ -1336,14 +1326,7 @@ def run_near_dup_monitor_stream(
         if timings is not None:
             timings.append((batch_id, n, n_pairs, time.monotonic() - t0))
 
-    writer = (
-        doc_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(gate)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_gate(doc_stream, gate, checkpoint_dir)
 
 
 def run_decontamination_stream(
@@ -1353,10 +1336,9 @@ def run_decontamination_stream(
     out_dir: str,
     checkpoint_dir: str,
     n: int | None = None,
-    available_now: bool = True,
     timings: list | None = None,
 ):
-    """Benchmark decontamination as an INGEST GATE (r12 — the
+    """Benchmark decontamination as an INGEST GATE (the
     decontamination family's streaming twin; the batch audit is
     text.benchmark_ngram_contamination): every micro-batch of
     candidate training documents is probed against the broadcast
@@ -1423,7 +1405,7 @@ def run_decontamination_stream(
                         ).alias("contamination_rate"),
                     )
                 )
-                # NOTE r12: threading these three writes was A/B'd a
+                # NOTE: threading these three writes was A/B'd a
                 # WASH — each is a sub-0.5 s batch-sized job, and the
                 # pool's py4j contention eats the overlap (unlike the
                 # ingest fan-out gate, whose three landings are heavy
@@ -1456,14 +1438,7 @@ def run_decontamination_stream(
                     (batch_id, n_docs, n_flagged, time.monotonic() - t0)
                 )
 
-    writer = (
-        doc_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(gate)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_gate(doc_stream, gate, checkpoint_dir)
 
 
 def run_cluster_update_stream(
@@ -1474,7 +1449,6 @@ def run_cluster_update_stream(
     labels_path: str,
     checkpoint_dir: str,
     jaccard_threshold: float = 0.6,
-    available_now: bool = True,
     timings: list | None = None,
 ):
     """Streaming maintenance of the CLUSTER artifact — the full
@@ -1506,7 +1480,7 @@ def run_cluster_update_stream(
     # the seed corpus is STATIC across the stream — shingle it once
     # (eager ckpt in the bounded FIFO); per micro-batch only the
     # published doc segments + the batch itself are shingled fresh
-    # (r12; pre-share, every batch's verify re-derived the corpus
+    # (pre-share, every batch's verify re-derived the corpus
     # shingle stage 3×)
     _mode = dedup.band_index_tokenizer(band_index_path)
     while len(dedup._sh_ckpt_cache) >= dedup._SH_CKPT_KEEP:
@@ -1524,7 +1498,7 @@ def run_cluster_update_stream(
             n = batch_df.count()
             if n:
                 # (1) publish this batch's bands + docs (idempotent;
-                # r12: threading this pair A/B'd a wash — see the
+                # threading this pair A/B'd a wash — see the
                 # decontamination gate note)
                 dedup.band_index_add(
                     spark, band_index_path, batch_df, batch_id
@@ -1616,14 +1590,7 @@ def run_cluster_update_stream(
         if timings is not None:
             timings.append((batch_id, n, n_pairs, time.monotonic() - t0))
 
-    writer = (
-        doc_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(gate)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_gate(doc_stream, gate, checkpoint_dir)
 
 
 def cluster_labels_erase_artifact(
@@ -1698,7 +1665,6 @@ def run_cluster_erase_stream(
     corpus_docs: DataFrame,
     checkpoint_dir: str,
     jaccard_threshold: float = 0.6,
-    available_now: bool = True,
 ):
     """Right-to-be-forgotten REQUESTS as a stream against the
     maintained cluster-labels artifact: each micro-batch of (doc_id)
@@ -1725,14 +1691,7 @@ def run_cluster_erase_stream(
             jaccard_threshold,
         )
 
-    writer = (
-        erase_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(gate)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_gate(erase_stream, gate, checkpoint_dir)
 
 
 def run_erase_request_stream(
@@ -1741,7 +1700,6 @@ def run_erase_request_stream(
     ledger_path: str,
     appliers: dict,
     checkpoint_dir: str,
-    available_now: bool = True,
     clock=None,
 ):
     """GDPR erase-request INTAKE as a stream: each micro-batch of
@@ -1797,14 +1755,7 @@ def run_erase_request_stream(
         finally:
             batch_df.unpersist()
 
-    writer = (
-        req_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(gate)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_gate(req_stream, gate, checkpoint_dir)
 
 
 def _sla_prior_hwm(
@@ -1845,10 +1796,9 @@ def run_erasure_sla_stream(
     out_dir: str,
     checkpoint_dir: str,
     artifacts: tuple[str, ...] | None = None,
-    available_now: bool = True,
 ):
-    """The erasure-SLA TIME dimension as a STREAM (r12 — VERDICT r11
-    #4: erasure_sla_audit is batch-over-ledger; every other
+    """The erasure-SLA TIME dimension as a STREAM
+    (erasure_sla_audit is batch-over-ledger; every other
     lifecycle family has both modes). Input: ledger EVENTS with
     event time — `kind='intake'` rows open a request (doc_id =
     subject, event_ts = intake), `kind='applied'` rows stamp an
@@ -1941,14 +1891,7 @@ def run_erasure_sla_stream(
         finally:
             batch_df.unpersist()
 
-    writer = (
-        event_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(gate)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_gate(event_stream, gate, checkpoint_dir)
 
 
 def run_ingest_fanout_stream(
@@ -1958,7 +1901,6 @@ def run_ingest_fanout_stream(
     prefix_path: str,
     chunk_path: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """ONE ingest read maintains THREE artifacts per micro-batch —
     the reference's multi-sink fix (foreachBatch fan-out over a
@@ -2024,14 +1966,7 @@ def run_ingest_fanout_stream(
         finally:
             batch_df.unpersist()
 
-    writer = (
-        doc_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(gate)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_gate(doc_stream, gate, checkpoint_dir)
 
 
 def run_boilerplate_scrub_stream(
@@ -2040,7 +1975,6 @@ def run_boilerplate_scrub_stream(
     template_path: str,
     cleaned_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
     timings: list | None = None,
 ):
     """Streaming boilerplate scrub against the MAINTAINED template
@@ -2075,14 +2009,7 @@ def run_boilerplate_scrub_stream(
                 (batch_id, batch_df.count(), n_out, time.monotonic() - t0)
             )
 
-    writer = (
-        doc_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(gate)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_gate(doc_stream, gate, checkpoint_dir)
 
 
 def run_pii_redact_stream(
@@ -2090,7 +2017,6 @@ def run_pii_redact_stream(
     doc_stream: DataFrame,
     redacted_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Streaming PII redaction — the third content gate beside the
     quality gate and the boilerplate scrub, completing the
@@ -2108,14 +2034,7 @@ def run_pii_redact_stream(
             os.path.join(redacted_dir, f"batch_id={batch_id}")
         )
 
-    writer = (
-        doc_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(gate)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_gate(doc_stream, gate, checkpoint_dir)
 
 
 def build_sft_prefix_index(corpus: DataFrame, path: str) -> None:
@@ -2342,7 +2261,6 @@ def run_sft_prefix_gate_stream(
     index_path: str,
     out_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
     timings: list | None = None,
 ):
     """Streaming PROMPT-PREFIX dedup gate over the maintained prefix
@@ -2395,7 +2313,7 @@ def run_sft_prefix_gate_stream(
                         )
                     ),
                 ).filter(F.col("rn") == 1)
-                # (r12: threading this write pair A/B'd a wash —
+                # (threading this write pair A/B'd a wash —
                 # sub-0.5 s jobs; see the decontamination gate note)
                 deepest.select(
                     "doc_id",
@@ -2414,14 +2332,7 @@ def run_sft_prefix_gate_stream(
         if timings is not None:
             timings.append((batch_id, n, time.monotonic() - t0))
 
-    writer = (
-        conv_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(gate)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_gate(conv_stream, gate, checkpoint_dir)
 
 
 MANIFEST_TOKENIZER_FILE = "_tokenizer.json"
@@ -2706,7 +2617,6 @@ def run_manifest_update_stream(
     doc_stream: DataFrame,
     manifest_path: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Streaming maintenance of the manifest artifact: each document
     micro-batch lands its per-shard terms as `adds/batch_id=N`.
@@ -2734,14 +2644,7 @@ def run_manifest_update_stream(
     def gate(batch_df: DataFrame, batch_id: int) -> None:
         manifest_add_batch(spark, manifest_path, batch_df, batch_id)
 
-    writer = (
-        doc_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(gate)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_gate(doc_stream, gate, checkpoint_dir)
 
 
 def manifest_add_batch(
