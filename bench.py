@@ -103,7 +103,7 @@ def main() -> None:
     master = spark.sparkContext.master
     default_parallelism = spark.sparkContext.defaultParallelism
 
-    # FIXED warmup set (VERDICT r4 ask #4): one query per major plan
+    # FIXED warmup set: one query per major plan
     # shape (scan-agg, broadcast-join chain, window, text shuffle,
     # vector math) so first-measured queries don't pay cold
     # JIT/codegen for their whole operator class
@@ -127,7 +127,7 @@ def main() -> None:
     names = list(QUERIES)
 
     # lifecycle streams record per-phase walls (build/stream/fold)
-    # into PHASE_TIMINGS on each invocation (round-9 ask #4) — the
+    # into PHASE_TIMINGS on each invocation — the
     # snapshot from each pass rides along so the drift analysis can
     # attribute variance to a phase instead of flagging totals
     from development_of_a_real_time_data_pipeline_for_user_profile_analysis_spark.plans.registry import (
@@ -160,7 +160,7 @@ def main() -> None:
     }
     total = round(sum(per_query.values()), 3)
 
-    # VERDICT r3 #5: the userfeed/kafka-wire bench entries conflate
+    # The userfeed/kafka-wire bench entries conflate
     # Python-DataSource envelope GENERATION (the test feeder — a
     # harness artifact replaced by the real Kafka read in production)
     # with the engine's ETL chain. Time the feeder alone through the
@@ -209,8 +209,8 @@ def main() -> None:
     # round-over-round hygiene, DRIFT-NORMALIZED (the PERF.md ratio-
     # median methodology, encoded): this box drifts uniformly between
     # rounds (measured up to ~1.36x at identical code), so absolute
-    # per-query comparison mass-flags on a slow day (r14: 139 spurious
-    # flags). The median per-query ratio vs the previous detail file
+    # per-query comparison mass-flags on a slow day (139 spurious flags
+    # in one run). The median per-query ratio vs the previous detail file
     # IS the machine drift — divide it out, THEN flag what still
     # regressed >1.3x AND >0.5 s (sub-second queries jitter on a warm
     # local JVM; first-pass flags are re-timed once and the min kept,
@@ -227,8 +227,8 @@ def main() -> None:
         # scalar drift from NON-phase queries only: lifecycle-stream
         # walls are scheduler-cadence dominated and heteroscedastic,
         # so they must neither set nor be judged by the scalar
-        # coefficient (VERDICT r10 #3 — drift 1.23 runs flagged
-        # untouched stream code while box-alone reruns read at prev)
+        # coefficient (a drift of 1.23 once flagged untouched stream
+        # code that read at the previous timings when run alone)
         ratios = sorted(
             per_query[n] / prev[n]
             for n in per_query

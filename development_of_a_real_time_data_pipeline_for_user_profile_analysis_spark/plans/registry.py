@@ -13911,8 +13911,8 @@ def q_jl_shortlist_curve(spark, sf_dir):
 DRIVER_PRIORITY = [
     # reference-parity ETL + dashboard core
     "etl_curate_profiles",
-    "kafka_wire_profiles",  # r3: Kafka wire-contract ETL (S1 column contract)
-    "kafka_wire_roundtrip",  # r4: K4 producer-sink wire twin (byte-for-byte)
+    "kafka_wire_profiles",  # Kafka wire-contract ETL (the S1 column contract)
+    "kafka_wire_roundtrip",  # producer-sink wire twin, checked byte for byte
     "profiles_pseudonymized",
     "latest_order_asof_events",
     "gender_distribution",
@@ -13923,93 +13923,93 @@ DRIVER_PRIORITY = [
     # joins / aggregates (TPC-H-style)
     "pricing_summary",
     "nation_revenue",
-    "erasure_sla_audit",  # r11: the erasure TIME dimension — per-request end-to-end latency vs a 72h policy deadline over the ledger's new intake/applied event times, four planted quadrants incl. recorded-breach and live-breach overdue (evicts gdpr_erasure_plan -> past window; erasure sizing stays in-window INSIDE erasure_completeness_audit's n_requested column and the anti-join discipline stays in-window via its left_anti referencing counts + split_leakage_repair's drop joins)
+    "erasure_sla_audit",  # erasure latency against a 72 h policy deadline
     "segment_priority_grouping_sets",
     # event analytics / windows
     "approx_distinct_users",
-    "ks_two_sample_drift",  # r4: nonparametric two-sample drift (stats-test family rep; evicts chi2_lang_source -> past window)
+    "ks_two_sample_drift",  # nonparametric two-sample drift: the stats-test family
     "events_rollup_multi",
     # streaming
     "streaming_events_hourly",
     "streaming_session_windows",
     "streaming_dedup_profiles",
-    "streaming_boilerplate_scrub",  # r9: the serve-mode content gate over the MAINTAINED template artifact enters (evicts streaming_user_totals -> past window; the custom-stateful discipline stays pytest-covered in tests/test_stateful*.py and streaming aggregation stays in-window via streaming_events_hourly + streaming_session_windows)
-    "streaming_sft_prefix_gate",  # r10: the prompt-prefix dedup as a STREAMING admission gate over the maintained prefix index — later batches dedup against earlier batches through adds segments, replay-safe via monotone batch-id exclusion (evicts sft_prefix_dedup -> past window; the cumulative turn-digest chain and the prefix-dedup semantics stay in-window INSIDE this gate, which probes the same maintained chains, and the batch chat-dedup family keeps sft_user_dedup)
-    "streaming_decontamination_gate",  # r12w9: decontamination's STREAMING twin — the last curation family without an ingest-time mode; per-batch broadcast 13-gram probe with admitted/quarantine ledgers, batch 1 sweeps an eval-hosting mirror and the 'recrawl' source flags at ~100% (evicts referential_integrity_report -> past window; FK/anti-join integrity discipline stays in-window via erasure_completeness_audit's anti-join counts + erasure_request_ledger_audit's zero-referencing-rows checks, and the batch contamination family keeps benchmark_bloom_contamination)
+    "streaming_boilerplate_scrub",  # serve-mode content gate over the maintained template artifact
+    "streaming_sft_prefix_gate",  # prompt-prefix dedup as a replay-safe streaming admission gate
+    "streaming_decontamination_gate",  # streaming decontamination: per-batch broadcast 13-gram probe
     # text analysis / training-data ops
-    "rougel_instruction_dupes",  # r12w10: ROUGE-L (LCS) instruction near-dup — the self-instruct 0.7 hygiene rule; ORDER-aware similarity the set-based tiers blur, rare-gram blocked, Arrow-batched numpy DP, oracle = the FULL dynamic program as an anti-diagonal recursive CTE (evicts sft_user_dedup -> past window; the role-aware keep-one discipline stays oracle-covered past window and the chat/SFT family keeps streaming_sft_prefix_gate — the maintained prefix-chain gate — plus preference_pair_near_dup_audit in-window)
-    "preference_pair_near_dup_audit",  # r11 (VERDICT r10 ask #2): the WIDER RLHF hygiene audit enters — chosen≈rejected near-degenerates as one (pair_id, shingle) keyed aggregate + cross-pair prompt dedup on md5(prompt) with the keep-one rule priced (evicts preference_pair_audit -> past window; exact-degenerate and canned-prompt counting stay in-window INSIDE this audit — family superset — and the eval-split leakage column stays oracle-covered past window)
-    "provenance_incremental_audit",  # r10: provenance stamps maintained at DELTA cost — stamp ⊕ xor(added) ⊕ xor(removed) scanning only the delta slices, incremental == recompute value-checked, stale artifact flags (evicts artifact_provenance_audit -> past window; the stamp device, the one-scan recompute, and the stale-stamp flagging all stay in-window INSIDE this audit — same family, superset discipline)
-    "gopher_quality_report",  # r3w6: rule-based quality gate (evicts top_ngrams)
-    "split_leakage_repair",  # r7: cross-split near-dup REPAIR enters as the split-governance rep (evicts deterministic_split -> past window; the 80/10/10 md5 assignment stays in-window INSIDE this query's split priority rule)
-    "soft_dedup_weights",  # r7: downweight-instead-of-drop dedup decision (soft-dedup family rep; evicts purchasing_customers -> past window, semi-join discipline stays in-window inside dedup_funnel_report's survivor semi-join and benchmark_bloom_contamination's gram probe)
-    "ngram_novelty_curve",  # r8: memorization-pressure curve over arrival order (ingest-audit family rep; evicts bloom_membership_audit -> past window, the Bloom build+FPR discipline stays in-window INSIDE benchmark_bloom_contamination's in-query Bloom tier)
-    "benchmark_bloom_contamination",  # r6: Bloom-tier 13-gram decontamination (contamination family enters the window; evicts event_type_pivot -> past window, reshaping stays evidenced by segment_priority_grouping_sets + conversion_funnel's conditional aggs)
-    "bpe_learned_merges",  # r6: the real BPE trainer loop (tokenizer-trainer family rep; evicts total_users -> past window, dashboard parity keeps gender_distribution + top_email_domains)
-    "dsir_selection_report",  # r6: DSIR importance selection, now histogram-CDF scale-safe (data-selection family rep; evicts mixture_sampled_counts -> past window, same family)
-    "quality_classifier_eval",  # r6: TRAINED quality-model eval (model-based-filtering family rep; evicts unigram_logprob_quality -> past window, same family)
+    "rougel_instruction_dupes",  # ROUGE-L near-dups: order-aware similarity the set-based tiers blur
+    "preference_pair_near_dup_audit",  # RLHF pair hygiene; superset of preference_pair_audit
+    "provenance_incremental_audit",  # provenance stamps at delta cost; superset of artifact_provenance_audit
+    "gopher_quality_report",  # rule-based quality gate
+    "split_leakage_repair",  # cross-split near-dup repair; carries the md5 split assignment
+    "soft_dedup_weights",  # downweight-instead-of-drop: the soft-dedup family
+    "ngram_novelty_curve",  # memorization pressure over arrival order: the ingest-audit family
+    "benchmark_bloom_contamination",  # Bloom-tier 13-gram decontamination; carries the Bloom build
+    "bpe_learned_merges",  # the BPE trainer loop: the tokenizer-trainer family
+    "dsir_selection_report",  # DSIR importance selection: the data-selection family
+    "quality_classifier_eval",  # trained quality model: the model-based-filtering family
     # dedup / similarity / curation / multimodal
-    "lang_band_index_probe",  # r10w6: the honest tokenizer reaching the MAINTAINED band artifact — tokenizer recorded as an artifact parameter, planted CJK batch probed against a lang-aware base index, oracle = lang-keyed chain on cross pairs (evicts edit_distance_dupes -> past window; the candidate-verify discipline stays in-window inside near_dedup_minhash's content-addressed verify and the DP tier stays oracle-covered past window)
-    "dedup_funnel_report",  # r6w2: cumulative tier funnel (raw→exact→normalized→chunk); evicts dedup_exact_groups -> past window, the exact keeper discipline stays in-window as this funnel's tier 2
+    "lang_band_index_probe",  # lang-aware tokenizer against the maintained band artifact
+    "dedup_funnel_report",  # cumulative dedup tier funnel; tier 2 is exact-dup keeping
     "near_dedup_minhash",
-    "lang_chunk_index_probe",  # r11 (VERDICT r10 #1): the honest tokenizer reaching the MAINTAINED chunk-digest artifact — tokenizer recorded in _tokenizer.json, prefix-shifted de-spaced CJK duplicates probed against a lang-aware base index, every shared span reclaimed where whitespace chunking reconstructs zero (evicts lang_dedup_delta_report -> past window; the lang-aware tier keeps THREE in-window reps — near_dedup_minhash's default, lang_band_index_probe's band artifact, chunk_dedup_report's planted-shift fixture — and the ws-vs-lang delta measurement stays oracle-covered past window)
-    "chunk_dedup_report",  # r6w2: chunk-substring dedup with reconstruction ledger (ExactSubstr family rep; evicts ngram_jaccard_dupes -> past window, Jaccard verify stays in-window inside near_dedup_minhash's candidate-verify stage)
-    "cluster_erase_update",  # r8: right-to-be-forgotten on the cluster artifact, oracle = recompute WITHOUT the erased (ghost bridges split; evicts near_dup_clusters -> past window, the connected-components discipline stays in-window INSIDE this query, which builds the labels before erasing)
+    "lang_chunk_index_probe",  # lang-aware tokenizer against the maintained chunk-digest artifact
+    "chunk_dedup_report",  # chunk-substring dedup with a reconstruction ledger
+    "cluster_erase_update",  # erasure on the cluster artifact; builds the CC labels it erases
     "profiles_upsert",
-    "semdedup_prune_plan",  # r6: semantic dedup on the MAINTAINED frozen-cell layout (evicts simhash_dupes -> past window; near-dup family keeps minhash/ngram/clusters reps in-window)
+    "semdedup_prune_plan",  # semantic dedup on the maintained frozen-cell layout
     "curation_pipeline",
-    "ann_ivfpq_serve",  # r5: probe-only serve from the MAINTAINED index artifact (ANN family rep; evicts ann_ivfpq_topk -> past window, same pipeline minus the artifact)
-    "manifest_packing_verify_lang_aware",  # r12 (VERDICT r11 #1/#2): the token-budget honest unit reaching the MAINTAINED manifest artifact — unit recorded in _tokenizer.json, built lang_aware over the planted de-spaced CJK corpus (whitespace counting sees each zh doc as ONE token), batch add through the recorded mode, packing-verify consumer recounting BOTH sides in it (evicts manifest_packing_verify -> past window; the consumer closure, corrupted-shard flip, and md5-shard device stay in-window INSIDE this query — family superset — and the whitespace recorded mode stays oracle-covered past window + pytest back-compat-pinned)
-    "erasure_completeness_audit",  # r8: GDPR closure across ALL FOUR maintained artifacts in one governance view (evicts ann_ivfpq_add_serve -> past window, the add==rebuild equivalence stays in-window INSIDE ann_ivfpq_erase_serve, which serves from the post-ADD artifact)
-    "ann_ivfpq_erase_serve",  # r7: tombstone erasure on the maintained artifact, oracle = rebuild WITHOUT the erased subjects (governance-reaches-the-index proof; evicts embedding_near_dupes -> past window, embedding near-dup stays in-window via semdedup_prune_plan's cell-bounded Arrow matmul — the same device)
-    "snapshot_retention_enforce",  # r10w4: the retention-policy ENFORCEMENT closure — keep-newest-K vacuum drops the expired epochs incl. the planted pre-erase leaker, post-drop audit value-checks zero past-retention + zero erased-subject references (evicts snapshot_erasure_audit -> past window; this query COMPOSES the same per-epoch leak audit and adds the policy loop — the snapshot/time-travel family's superset rep)
-    "erasure_request_ledger_audit",  # r9: the durable erase-request ledger — planted crash before the last artifact, resumable gap, zero pending + zero referencing rows after resume across all six maintained artifacts incl. the r9 SFT prefix index (evicts hybrid_rrf_search -> past window; retrieval stays in-window via the IVF-PQ serves, fusion stays oracle-covered)
+    "ann_ivfpq_serve",  # probe-only serve from the maintained IVF-PQ index
+    "manifest_packing_verify_lang_aware",  # lang-aware token budget; superset of manifest_packing_verify
+    "erasure_completeness_audit",  # erasure closure across all four maintained artifacts
+    "ann_ivfpq_erase_serve",  # tombstone erasure, served from the post-add artifact
+    "snapshot_retention_enforce",  # retention vacuum plus the per-epoch leak audit
+    "erasure_request_ledger_audit",  # durable erase-request ledger resumed after a planted crash
     "multimodal_features",
     # --- past-window (evicted) entries keep their export order stable ---
-    "sft_user_dedup",  # r12w10 evicted: the role-aware keep-one-response rule stays oracle-covered past window; the chat/SFT family keeps streaming_sft_prefix_gate (maintained prefix chains) + preference_pair_near_dup_audit + the new rougel_instruction_dupes in-window
-    "referential_integrity_report",  # r12w9 evicted: FK/anti-join integrity discipline stays in-window via erasure_completeness_audit's anti-join counts + erasure_request_ledger_audit's zero-referencing-rows checks; the report itself stays oracle-covered past window
-    "manifest_packing_verify",  # r12 evicted: the consumer closure + corrupted-shard flip stay in-window inside manifest_packing_verify_lang_aware (family superset, recorded-unit on top); the whitespace recorded mode stays oracle-covered past window and back-compat pytest-pinned (test_token_budget_unit)
-    "preference_pair_audit",  # r11 evicted: exact-degenerate + canned-prompt counting stay in-window inside preference_pair_near_dup_audit (family superset); eval-split leakage stays oracle-covered past window
-    "lang_dedup_delta_report",  # r11 evicted: lang-aware tier keeps near_dedup_minhash (default) + lang_band_index_probe + chunk_dedup_report (planted shift fixture) in-window; the ws-vs-lang delta measurement stays oracle-covered past window
-    "gdpr_erasure_plan",  # r11 evicted: erasure sizing stays in-window inside erasure_completeness_audit (n_requested) and anti-join discipline via its left_anti counts + split_leakage_repair
-    "edit_distance_dupes",  # r10w6 evicted: candidate-verify stays in-window inside near_dedup_minhash's content-addressed verify; the char-DP tier stays oracle-covered past window
-    "snapshot_erasure_audit",  # r10w4 evicted: snapshot_retention_enforce composes the same per-epoch leak audit and adds the policy-enforcement loop (family superset)
-    "sft_prefix_dedup",  # r10 evicted: prefix-dedup semantics stay in-window inside streaming_sft_prefix_gate (same maintained chain index, same digest device); batch chat dedup keeps sft_user_dedup
-    "artifact_provenance_audit",  # r10 evicted: the stamp device + recompute diff + stale flagging stay in-window inside provenance_incremental_audit (superset: adds the delta-fold identity)
-    "shard_manifest_time_travel",  # r10 evicted: snapshot retention/as-of folds stay in-window inside snapshot_erasure_audit (two snapshotting commits, per-epoch folds value-checked)
-    "shard_manifest_erase_serve",  # r10 evicted: manifest erase+fenced-fold stays in-window via erasure_completeness_audit + erasure_request_ledger_audit; the consumer contract enters via manifest_packing_verify
-    "zorder_files",  # r10 evicted: data-layout family keeps manifest_packing_verify in-window (shard-packing consumer contract); z-order clustering stays oracle-covered past window
-    "boilerplate_scrub_report",  # r9w9 evicted: streaming_boilerplate_scrub carries the family in-window over the same maintained template artifact with the same oracle
-    "ivfpq_incremental_add",  # r9w10 evicted: add==rebuild stays in-window inside ann_ivfpq_erase_serve (serves from the post-ADD artifact)
-    "ivfpq_tuning_curve",  # r9w10 evicted: tuning/recall curve stays oracle-covered past window; ANN family keeps serve + erase-serve in-window
-    "jl_shortlist_curve",  # r9 evicted: recall-curve discipline stays oracle-covered past window (the explode-config device also inside ivfpq_tuning_curve); JL sketch stays oracle-covered past window
-    "conversion_funnel",  # r9 evicted: conditional-agg funnels stay in-window via segment_priority_grouping_sets + events_rollup_multi
-    "profiles_quality_report",  # r9 evicted: rule-gate discipline stays in-window via gopher_quality_report; profile integrity via referential_integrity_report
-    "streaming_user_totals",  # r9 evicted: custom-stateful op stays pytest-covered (tests/test_stateful*.py); streaming aggs stay in-window via streaming_events_hourly + session windows
-    "hybrid_rrf_search",  # r9 evicted: retrieval stays in-window via the IVF-PQ serves; RRF fusion stays oracle-covered past window
-    "monthly_revenue_ewma",  # r9 evicted: sequential smoothing stays oracle-covered past window
-    "text_stats",  # r8 evicted: basic corpus stats stay evidenced via gopher_quality_report + dedup_funnel_report word accounting
-    "bloom_membership_audit",  # r8 evicted: Bloom build+FPR stays in-window inside benchmark_bloom_contamination
-    "near_dup_clusters",  # r8 evicted: CC discipline stays in-window inside cluster_erase_update (which builds the labels it erases)
-    "ann_ivfpq_add_serve",  # r8 evicted: add==rebuild equivalence stays in-window inside ann_ivfpq_erase_serve (post-add artifact)
-    "cluster_canonicals",  # r4: rotated out of the 50-window (family rep stays: near_dup_clusters evicted r8 -> cluster_erase_update); QUERIES.md
-    "deterministic_split",  # r7 evicted: the md5 split assignment stays in-window inside split_leakage_repair
-    "purchasing_customers",  # r7 evicted: semi-join discipline stays in-window via dedup_funnel_report + benchmark_bloom_contamination probes
-    "customer_order_rank",  # r7 evicted: ranking windows stay in-window via chunk_dedup_report keeper + IVF-PQ re-rank
-    "embedding_near_dupes",  # r7 evicted: embedding near-dup stays in-window via semdedup_prune_plan (same Arrow matmul device)
-    "total_users",  # r6 evicted: A3 count parity stays oracle-covered past window
-    "open_not_pending_customers",  # r6 evicted: anti-join semantics stay in-window via gdpr_erasure_plan
-    "event_type_pivot",  # r6 evicted: pivot stays oracle-covered past window
-    "simhash_dupes",  # r6 evicted: SimHash tier stays oracle-covered past window
-    "mixture_sampled_counts",  # r6 evicted: mixture sampling stays oracle-covered past window (dsir_selection_report is the selection-family rep)
-    "unigram_logprob_quality",  # r6 evicted: LM-proxy quality stays oracle-covered past window (quality_classifier_eval is the model-based rep)
-    "dedup_exact_groups",  # r6w2 evicted: exact keeper discipline stays in-window via dedup_funnel_report tier 2
-    "ngram_jaccard_dupes",  # r6w2 evicted: Jaccard verify stays in-window inside near_dedup_minhash
-    "mktsegment_rollup",  # r4w9 evicted: stays oracle-covered past window
-    "pq_codebook_report",  # r4w7 evicted: sizing report stays oracle-covered past window
-    "quantize_embeddings",  # r4 evicted: int8 tier stays oracle-covered past window
-    "chi2_lang_source",  # r4 evicted: chi-square stays oracle-covered past window
-    "split_contamination",  # r4 evicted: decontamination stays oracle-covered past window
+    "sft_user_dedup",  # chat dedup stays in-window via streaming_sft_prefix_gate
+    "referential_integrity_report",  # FK anti-joins stay in-window via the erasure audits
+    "manifest_packing_verify",  # in-window inside manifest_packing_verify_lang_aware
+    "preference_pair_audit",  # in-window inside preference_pair_near_dup_audit
+    "lang_dedup_delta_report",  # the lang-aware tier has three in-window queries
+    "gdpr_erasure_plan",  # erasure sizing in-window inside erasure_completeness_audit
+    "edit_distance_dupes",  # candidate verify in-window inside near_dedup_minhash
+    "snapshot_erasure_audit",  # in-window inside snapshot_retention_enforce
+    "sft_prefix_dedup",  # in-window inside streaming_sft_prefix_gate
+    "artifact_provenance_audit",  # in-window inside provenance_incremental_audit
+    "shard_manifest_time_travel",  # per-epoch folds in-window inside snapshot_retention_enforce
+    "shard_manifest_erase_serve",  # manifest erasure in-window via the erasure audits
+    "zorder_files",  # data layout in-window via manifest_packing_verify_lang_aware
+    "boilerplate_scrub_report",  # in-window as streaming_boilerplate_scrub (same artifact)
+    "ivfpq_incremental_add",  # add == rebuild in-window inside ann_ivfpq_erase_serve
+    "ivfpq_tuning_curve",  # the ANN family keeps serve and erase-serve in-window
+    "jl_shortlist_curve",  # recall curve, oracle-covered
+    "conversion_funnel",  # conditional aggregates in-window via events_rollup_multi
+    "profiles_quality_report",  # rule gates in-window via gopher_quality_report
+    "streaming_user_totals",  # custom state is pytest-covered (tests/test_stateful*.py)
+    "hybrid_rrf_search",  # retrieval in-window via the IVF-PQ serves
+    "monthly_revenue_ewma",  # oracle-covered
+    "text_stats",  # corpus stats in-window via gopher_quality_report
+    "bloom_membership_audit",  # in-window inside benchmark_bloom_contamination
+    "near_dup_clusters",  # in-window inside cluster_erase_update
+    "ann_ivfpq_add_serve",  # in-window inside ann_ivfpq_erase_serve
+    "cluster_canonicals",  # CC labels in-window inside cluster_erase_update
+    "deterministic_split",  # in-window inside split_leakage_repair
+    "purchasing_customers",  # semi-joins in-window via dedup_funnel_report
+    "customer_order_rank",  # ranking windows in-window via chunk_dedup_report
+    "embedding_near_dupes",  # same Arrow matmul in-window via semdedup_prune_plan
+    "total_users",  # count parity, oracle-covered
+    "open_not_pending_customers",  # anti-joins in-window via erasure_completeness_audit
+    "event_type_pivot",  # oracle-covered
+    "simhash_dupes",  # oracle-covered
+    "mixture_sampled_counts",  # data selection in-window via dsir_selection_report
+    "unigram_logprob_quality",  # model-based quality in-window via quality_classifier_eval
+    "dedup_exact_groups",  # in-window as dedup_funnel_report's tier 2
+    "ngram_jaccard_dupes",  # Jaccard verify in-window inside near_dedup_minhash
+    "mktsegment_rollup",  # oracle-covered
+    "pq_codebook_report",  # oracle-covered
+    "quantize_embeddings",  # oracle-covered
+    "chi2_lang_source",  # oracle-covered
+    "split_contamination",  # oracle-covered
 ]
 
 

@@ -8,7 +8,11 @@ has a checkpoint — the Mongo and console sinks silently duplicate on
 restart. Here the design is ONE checkpointed query whose
 ``foreachBatch`` fans out to every sink: one source read, one
 checkpoint, consistent batch ids across sinks, and idempotent
-(replace-by-batch) parquet writes so restart replays are harmless.
+(replace-by-batch) parquet sinks so restart replays are harmless. The
+fan-out is one Spark write per micro-batch, partitioned by sink and
+moved into place, so every sink of a pipeline with a dead-letter sink
+shares one union schema: the profile columns plus ``_corrupt_record``
+(``run_pipeline`` has the contract).
 
 The same batch transform functions (operators/etl.py) run inside the
 stream — streaming/batch parity is by construction, not by parallel
@@ -203,6 +207,23 @@ def curated_stream(source: DataFrame) -> DataFrame:
     return curate_profiles(parse_envelopes(source))
 
 
+FANOUT_STAGING = "_fanout"
+SINK_COL = "_sink"
+
+
+def _move(jvm, conf, src: str, dst: str) -> None:
+    """Replace the directory `dst` by `src` with Hadoop
+    FileSystem.rename, so sinks on any Hadoop filesystem work. `dst` is
+    deleted first: a replayed batch replaces itself."""
+    fs = jvm.org.apache.hadoop.fs
+    d = fs.Path(dst)
+    dfs = d.getFileSystem(conf)
+    dfs.delete(d, True)
+    dfs.mkdirs(d.getParent())
+    if not dfs.rename(fs.Path(src), d):
+        raise OSError(f"fan-out could not move {src} to {dst}")
+
+
 def run_pipeline(
     spark: SparkSession,
     source: DataFrame,
@@ -215,22 +236,46 @@ def run_pipeline(
     """Start THE streaming query: single checkpoint, foreachBatch
     fan-out to every sink directory (curated table, serving table,
     dead-letter, ... — the roles Cassandra/Mongo/console played in
-    the reference). The batch is persisted once and written N times —
-    one source read total, versus the reference's N full re-reads.
+    the reference). One source read total, versus the reference's N
+    full re-reads, and one Spark write per micro-batch: each row is
+    tagged with the sinks it goes to (a curated row with every
+    profile sink, a dead-letter row with the dead-letter sink), the
+    tagged batch is written once, partitioned by sink, to
+    ``<checkpoint_dir>/_fanout``, and the driver moves each sink's
+    partition to ``<sink>/batch_id=N``. The staging dir is gone after
+    every batch; it and the sinks share one filesystem, since a move
+    is a rename.
 
-    foreachBatch is at-least-once per sink, so each write is per-batch
-    idempotent: the batch id is embedded in the directory and written
-    with overwrite — a replayed batch replaces itself instead of
-    duplicating (the guarantee the reference only got implicitly from
-    Cassandra's PK upsert).
+    Sink schema: with ``dead_letter_dir`` every sink, profile and
+    dead-letter alike, gets the union schema — the nine profile
+    columns plus ``_corrupt_record``. ``_corrupt_record`` is all-NULL
+    in the profile sinks, and the profile columns are all-NULL in the
+    dead-letter sink, so readers project the columns they need.
+    Without it the profile sinks get the nine profile columns. A sink
+    that gets no row of a batch (no bad rows, or only bad ones) still
+    gets a schema-only file under its ``batch_id=N``, at the price of
+    one extra write on that batch only.
+
+    foreachBatch is at-least-once, so each batch is idempotent per
+    sink: the batch id is the directory and the move deletes it
+    first — a replayed batch replaces itself instead of duplicating
+    (the guarantee the reference only got implicitly from Cassandra's
+    PK upsert), also after a crash between two moves.
+
+    Every batch records the observed metrics ``fanout`` (``rows_in``,
+    ``curated``, ``dead_letter``: rows reaching the fan-out, of them
+    those written to every profile sink and those dead-lettered) in
+    ``query.recentProgress[i]["observedMetrics"]``, at no extra job.
     """
+    from ..operators.etl import CORRUPT_COL
+
     if dead_letter_dir is None:
-        stream, has_audit = curated_stream(source), False
+        stream, bad = curated_stream(source), F.lit(False)
     else:
         # audited parse keeps the raw payload of unparseable rows so
         # the dead-letter sink gets them (SURVEY §1.2: the reference
         # silently dropped corrupt records)
-        from ..operators.etl import CORRUPT_COL, curate_profiles, parse_envelopes_audited
+        from ..operators.etl import parse_envelopes_audited
 
         audited = parse_envelopes_audited(source)
         good = curate_profiles(audited.filter(F.col("user").isNotNull()))
@@ -248,29 +293,43 @@ def run_pipeline(
                 CORRUPT_COL,
             )
         )
-        has_audit = True
+        bad = F.col(CORRUPT_COL).isNotNull()
+    stream = stream.observe(
+        "fanout",
+        F.count(F.lit(1)).alias("rows_in"),
+        F.count_if(~bad).alias("curated"),
+        F.count_if(bad).alias("dead_letter"),
+    )
+
+    targets = list(sink_dirs) + ([] if dead_letter_dir is None else [dead_letter_dir])
+    every_profile_sink = F.array(*[F.lit(i) for i in range(len(sink_dirs))])
+    sinks_of_row = F.when(~bad, every_profile_sink).otherwise(
+        F.array(F.lit(len(sink_dirs)))
+    )
+    staging = os.path.join(checkpoint_dir, FANOUT_STAGING)
+    jvm = spark.sparkContext._jvm
+    Path = jvm.org.apache.hadoop.fs.Path
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    staging_fs = Path(staging).getFileSystem(conf)
 
     def fan_out(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            if has_audit:
-                good = batch_df.filter(F.col("_corrupt_record").isNull()).drop(
-                    "_corrupt_record"
-                )
-                bad = batch_df.filter(F.col("_corrupt_record").isNotNull()).select(
-                    "_corrupt_record"
-                )
-                bad.write.mode("overwrite").parquet(
-                    os.path.join(dead_letter_dir, f"batch_id={batch_id}")
-                )
-            else:
-                good = batch_df
-            for d in sink_dirs:
-                good.write.mode("overwrite").parquet(
-                    os.path.join(d, f"batch_id={batch_id}")
-                )
-        finally:
-            batch_df.unpersist()
+        session = batch_df.sparkSession  # the stream's own session
+        # one open file per sink, so the partitioned write needs no sort
+        session.conf.set(
+            "spark.sql.maxConcurrentOutputFileWriters", str(len(targets))
+        )
+        batch_df.withColumn(SINK_COL, F.explode(sinks_of_row)).write.mode(
+            "overwrite"
+        ).partitionBy(SINK_COL).parquet(staging)
+        for i, target in enumerate(targets):
+            part = os.path.join(staging, f"{SINK_COL}={i}")
+            if not staging_fs.exists(Path(part)):
+                # limit(0) plans as an empty local relation: no source re-read
+                batch_df.limit(0).write.parquet(part)
+            # each batch dir keeps the commit marker of a plain write
+            staging_fs.create(Path(part, "_SUCCESS"), True).close()
+            _move(jvm, conf, part, os.path.join(target, f"batch_id={batch_id}"))
+        staging_fs.delete(Path(staging), True)
 
     writer = (
         stream.writeStream.outputMode("append")

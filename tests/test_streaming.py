@@ -11,6 +11,9 @@ import os
 import pytest
 from pyspark.sql import Row
 
+from development_of_a_real_time_data_pipeline_for_user_profile_analysis_spark.schemas import (
+    PROFILE_COLUMNS,
+)
 from development_of_a_real_time_data_pipeline_for_user_profile_analysis_spark.sources.synthetic import (
     write_envelopes_jsonl,
 )
@@ -41,7 +44,7 @@ def test_fanout_writes_all_sinks_consistently(spark, stream_dirs):
     q = pipeline.run_pipeline(
         spark, source, [stream_dirs["sink_a"], stream_dirs["sink_b"]], stream_dirs["ckpt"]
     )
-    q.awaitTermination(120)
+    pipeline.drain(q, "fan-out")
     a = spark.read.parquet(stream_dirs["sink_a"])
     b = spark.read.parquet(stream_dirs["sink_b"])
     # batch parity: same transform in batch mode gives identical rows
@@ -57,14 +60,14 @@ def test_restart_resumes_without_duplicates(spark, stream_dirs):
     _feed(stream_dirs["src"], 100, start=1, name="a.jsonl")
     source = pipeline.read_envelope_file_stream(spark, stream_dirs["src"])
     q = pipeline.run_pipeline(spark, source, [stream_dirs["sink_a"]], stream_dirs["ckpt"])
-    q.awaitTermination(120)
+    pipeline.drain(q, "first run")
     n1 = spark.read.parquet(stream_dirs["sink_a"]).count()
 
     # new file arrives; restart from the same checkpoint
     _feed(stream_dirs["src"], 100, start=1001, name="b.jsonl")
     source2 = pipeline.read_envelope_file_stream(spark, stream_dirs["src"])
     q2 = pipeline.run_pipeline(spark, source2, [stream_dirs["sink_a"]], stream_dirs["ckpt"])
-    q2.awaitTermination(120)
+    pipeline.drain(q2, "restarted run")
 
     out = spark.read.parquet(stream_dirs["sink_a"])
     n2 = out.count()
@@ -86,7 +89,7 @@ def test_streaming_dedup_drops_duplicate_ids(spark, stream_dirs):
         .option("checkpointLocation", stream_dirs["ckpt"])
         .start()
     )
-    q.awaitTermination(120)
+    pipeline.drain(q, "dedup")
     out = spark.sql("SELECT id FROM dedup_out")
     assert out.count() == out.distinct().count()
     batch_once = 50 - 1 - len([k for k in range(1, 51) if k % 101 == 0])  # k=? none <=50; minus none
@@ -106,7 +109,7 @@ def test_streaming_windowed_registrations(spark, stream_dirs):
         .option("checkpointLocation", stream_dirs["ckpt"])
         .start()
     )
-    q.awaitTermination(120)
+    pipeline.drain(q, "windowed registrations")
     rows = spark.sql("SELECT * FROM reg_windows").collect()
     assert sum(r.registrations for r in rows) > 0 or True  # append-mode emits closed windows only
     # total registrations across windows must not exceed input users
@@ -134,7 +137,7 @@ def test_streaming_session_window(spark, stream_dirs, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    pipeline.drain(q, "session windows")
     got = {
         (r.user_id, r.session_start): r.n_events
         for r in spark.sql("SELECT * FROM sessions_out").collect()
@@ -161,7 +164,7 @@ def test_stream_static_join_enriches(spark, stream_dirs):
         .option("checkpointLocation", stream_dirs["ckpt"])
         .start()
     )
-    q.awaitTermination(120)
+    pipeline.drain(q, "enrichment")
     out = spark.sql("SELECT * FROM enriched")
     assert out.filter("code IS NULL").count() == 0
     assert {r.code for r in out.select("code").distinct().collect()} == {"M", "F"}
@@ -180,14 +183,17 @@ def test_dead_letter_sink_captures_malformed(spark, stream_dirs, tmp_path):
         stream_dirs["ckpt"],
         dead_letter_dir=dl,
     )
-    q.awaitTermination(120)
+    pipeline.drain(q, "dead-letter fan-out")
     dead = spark.read.parquet(dl)
     assert dead.count() == 10
-    # batch_id is the hive partition dir; payload is the raw line
-    assert sorted(dead.columns) == ["_corrupt_record", "batch_id"]
+    # one write per batch: every sink gets the profile columns plus
+    # _corrupt_record (the raw line), and batch_id is the hive
+    # partition dir
+    union = PROFILE_COLUMNS + ["_corrupt_record", "batch_id"]
+    assert dead.columns == union
     good = spark.read.parquet(stream_dirs["sink_a"])
     assert good.count() == 80  # 90 - 10 malformed (no null-ids < 101)
-    assert "_corrupt_record" not in good.columns
+    assert good.columns == union
 
 
 def test_idempotent_batch_overwrite(spark, stream_dirs):
@@ -196,7 +202,7 @@ def test_idempotent_batch_overwrite(spark, stream_dirs):
     _feed(stream_dirs["src"], 40)
     source = pipeline.read_envelope_file_stream(spark, stream_dirs["src"])
     q = pipeline.run_pipeline(spark, source, [stream_dirs["sink_a"]], stream_dirs["ckpt"])
-    q.awaitTermination(120)
+    pipeline.drain(q, "replayed fan-out")
     before = spark.read.parquet(stream_dirs["sink_a"]).count()
     # simulate a replay of batch 0: write the same batch dir again
     batch0 = glob.glob(os.path.join(stream_dirs["sink_a"], "batch_id=*"))[0]
@@ -224,7 +230,7 @@ def test_streaming_dedup_within_watermark_bounds_state(spark, stream_dirs):
         .option("checkpointLocation", stream_dirs["ckpt"])
         .start()
     )
-    q.awaitTermination(120)
+    pipeline.drain(q, "dedup within watermark")
     out = spark.sql("SELECT id FROM dedup_wm_out")
     assert out.count() == out.distinct().count() == 50
 
@@ -299,7 +305,7 @@ def test_foreachbatch_incremental_rollup_maintenance(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        pipeline.drain(q, "rollup maintenance")
 
     run_stream()
     land(df.filter("event_id % 3 = 0"), "b2.parquet")
@@ -348,7 +354,7 @@ def test_drift_monitor_flags_unseen_type_and_null_sigma_baseline(
         out.writeStream.format("memory").queryName(name)
         .outputMode("complete").trigger(availableNow=True).start()
     )
-    q.awaitTermination(120)
+    pipeline.drain(q, "drift monitor")
     got = {r.event_type: r for r in spark.table(name).collect()}
     assert set(got) == {"view", "solo", "brand_new"}
     assert got["brand_new"].baseline_missing and got["brand_new"].alert
@@ -374,7 +380,7 @@ def test_producer_wire_log_roundtrip_stream_matches_batch(
     q = pipeline.write_wire_log_stream(
         records, log_dir, str(tmp_path / "wire_ckpt")
     )
-    q.awaitTermination(120)
+    pipeline.drain(q, "wire log")
 
     from development_of_a_real_time_data_pipeline_for_user_profile_analysis_spark.operators import (
         etl,
