@@ -63,6 +63,24 @@ def start_gate(stream: DataFrame, gate, checkpoint_dir: str):
     )
 
 
+def nonempty_batch(gate):
+    """Frame the foreachBatch body `gate(batch_df, batch_id)` for
+    gates that read their batch more than once: the batch is persisted,
+    counted, handed to `gate` only when it holds rows, and unpersisted
+    afterwards, also when `gate` raises. Rows in and batch durations
+    per trigger are in the query's own `recentProgress`."""
+
+    def framed(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.persist()
+        try:
+            if batch_df.count():
+                gate(batch_df, batch_id)
+        finally:
+            batch_df.unpersist()
+
+    return framed
+
+
 def drain(q, what: str) -> None:
     """Wait for the availableNow query `q` to finish. On timeout
     awaitTermination returns False instead of raising, and a sink
@@ -348,7 +366,6 @@ def run_ivfpq_add_stream(
     vector_stream: DataFrame,
     index_path: str,
     checkpoint_dir: str,
-    timings: list | None = None,
 ):
     """Streaming maintenance of the IVF-PQ index artifact: each
     micro-batch of (vec_id, embedding) rows encodes
@@ -363,33 +380,18 @@ def run_ivfpq_add_stream(
     the segment directory and the write is overwrite — a replayed
     batch replaces itself (run_pipeline's device). Per-batch cost is
     one narrow scan of the batch: O(|batch|), independent of both
-    corpus size and the number of standing segments.
-
-    `timings` (optional test/bench hook): appends
-    (batch_id, n_rows, seconds) per processed batch."""
-    import time
-
+    corpus size and the number of standing segments."""
     from ..operators import similarity
 
     index = similarity.read_ivfpq_index(spark, index_path)
 
+    @nonempty_batch
     def add_batch(batch_df: DataFrame, batch_id: int) -> None:
-        t0 = time.monotonic()
-        batch_df.persist()
-        try:
-            n = batch_df.count()
-            if n:
-                similarity.ivfpq_add_batch(index, batch_df).write.mode(
-                    "overwrite"
-                ).partitionBy("cell").parquet(
-                    os.path.join(
-                        index_path, "codes_adds", f"batch_id={batch_id}"
-                    )
-                )
-        finally:
-            batch_df.unpersist()
-        if timings is not None:
-            timings.append((batch_id, n, time.monotonic() - t0))
+        similarity.ivfpq_add_batch(index, batch_df).write.mode(
+            "overwrite"
+        ).partitionBy("cell").parquet(
+            os.path.join(index_path, "codes_adds", f"batch_id={batch_id}")
+        )
 
     return start_gate(vector_stream, add_batch, checkpoint_dir)
 
@@ -399,7 +401,6 @@ def run_ivfpq_erase_stream(
     id_stream: DataFrame,
     index_path: str,
     checkpoint_dir: str,
-    timings: list | None = None,
 ):
     """Streaming right-to-be-forgotten against the maintained IVF-PQ
     artifact — the erasure twin of run_ivfpq_add_stream: each
@@ -415,29 +416,14 @@ def run_ivfpq_erase_stream(
     derived from the batch id and the write is overwrite — a replayed
     batch replaces its own segment (never double-counts). Per-batch
     cost: one broadcast semi-join of the ids against the codes plus a
-    tiny parquet write — O(|batch|)-driven, flat in corpus size.
-
-    `timings` (optional test hook): (batch_id, n_ids, seconds)."""
-    import time
-
+    tiny parquet write — O(|batch|)-driven, flat in corpus size."""
     from ..operators import similarity
 
+    @nonempty_batch
     def erase_batch(batch_df: DataFrame, batch_id: int) -> None:
-        t0 = time.monotonic()
-        batch_df.persist()
-        try:
-            n = batch_df.count()
-            if n:
-                similarity.ivfpq_erase(
-                    spark,
-                    index_path,
-                    batch_df.select("vec_id"),
-                    seg_id=f"s{batch_id}",
-                )
-        finally:
-            batch_df.unpersist()
-        if timings is not None:
-            timings.append((batch_id, n, time.monotonic() - t0))
+        similarity.ivfpq_erase(
+            spark, index_path, batch_df.select("vec_id"), seg_id=f"s{batch_id}"
+        )
 
     return start_gate(id_stream, erase_batch, checkpoint_dir)
 
@@ -623,13 +609,13 @@ def drift_monitor_stream(
     it surfaces with ``baseline_missing = true`` and ``alert = true``.
     A baseline type with a single training row has NULL stddev_samp;
     its comparison is indeterminate, so the alert coalesces to true
-    (fail-loud) rather than riding through as NULL (ADVICE r3).
+    (fail-loud) rather than riding through as NULL.
     """
     # exact integer-cents moments (value is exact 2-dp): both the
     # mean and the sample stddev derive from order-exact long sums
     # (n, Σc, Σc²) — floor(avg/stddev of doubles) sits on .5 knife
-    # edges where a partial-merge-order ulp flips the cent (the
-    # round-9 pq_codebook_report flip, observed under load). Σc² and
+    # edges where a partial-merge-order ulp flips the cent (seen in
+    # pq_codebook_report under load). Σc² and
     # (Σc)²/n leave long range only AFTER the exact sums, as doubles
     # of exact integers — deterministic arithmetic.
     cents = F.floor(F.col("value") * 100 + 0.5).cast("long")
@@ -700,7 +686,6 @@ def run_quality_gate_stream(
     threshold: int,
     kept_dir: str,
     checkpoint_dir: str,
-    timings: list | None = None,
 ):
     """Streaming quality gate under the TRAINED model — the serving
     half of model-based filtering (train in batch:
@@ -712,38 +697,22 @@ def run_quality_gate_stream(
     per batch (overwrite by batch id, run_pipeline's device). The
     model artifact is 9 floats + 1 int: no state store, no retrain
     on the hot path — at 100 TB/day of ingest this is a stateless
-    map over each batch.
-
-    `timings`: optional (batch_id, n_in, n_kept, seconds) hook."""
-    import time
-
+    map over each batch, and the batch feeds one write, so it is
+    neither persisted nor counted."""
     from ..operators.text import quality_model_scored
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
-        t0 = time.monotonic()
-        batch_df.persist()
-        try:
-            n_in = batch_df.count()
-            scored = quality_model_scored(batch_df, weights)
-            # threshold None = degenerate training corpus (k == 0):
-            # the gate keeps nothing rather than crashing the stream
-            kept = (
-                scored.filter(F.lit(False))
-                if threshold is None
-                else scored.filter(
-                    F.col("milli_logit") >= F.lit(int(threshold))
-                )
-            )
-            kept.write.mode("overwrite").parquet(
-                os.path.join(kept_dir, f"batch_id={batch_id}")
-            )
-        finally:
-            batch_df.unpersist()
-        if timings is not None:
-            n_kept = _rp(spark, 
-                os.path.join(kept_dir, f"batch_id={batch_id}")
-            ).count()
-            timings.append((batch_id, n_in, n_kept, time.monotonic() - t0))
+        scored = quality_model_scored(batch_df, weights)
+        # threshold None = degenerate training corpus (k == 0):
+        # the gate keeps nothing rather than crashing the stream
+        kept = (
+            scored.filter(F.lit(False))
+            if threshold is None
+            else scored.filter(F.col("milli_logit") >= F.lit(int(threshold)))
+        )
+        kept.write.mode("overwrite").parquet(
+            os.path.join(kept_dir, f"batch_id={batch_id}")
+        )
 
     return start_gate(doc_stream, gate, checkpoint_dir)
 
@@ -783,8 +752,8 @@ def build_chunk_digest_index(
     (digest, refs) so erasure on the content-addressed artifact is
     correct (see dedup.chunk_digest_index) — the artifact
     run_chunk_dedup_stream probes and appends to. The chunking
-    `tokenizer` is recorded in `{index_path}/_tokenizer.json`
-    (VERDICT r10 #1): `lang_aware` chunks the no-whitespace language
+    `tokenizer` is recorded in `{index_path}/_tokenizer.json`:
+    `lang_aware` chunks the no-whitespace language
     partition on char rolling-hash boundaries, the honest mode for
     CJK corpora; every add/probe/erase path reads the meta. The meta
     lives at the artifact root, outside the base/adds/erases
@@ -812,7 +781,7 @@ def build_chunk_digest_index(
         finish_param_build,
     )
 
-    # build-intent fence (r12): a crash between the base write and
+    # build-intent fence: a crash between the base write and
     # the meta publish must read LOUD, not as the meta-less
     # whitespace fallback (or, on rebuild, the stale old meta).
     begin_param_build(
@@ -911,7 +880,6 @@ def run_chunk_dedup_stream(
     doc_stream: DataFrame,
     index_path: str,
     checkpoint_dir: str,
-    timings: list | None = None,
 ):
     """Streaming chunk-substring dedup: each micro-batch of documents
     is reconstructed against the maintained chunk-digest index —
@@ -927,75 +895,48 @@ def run_chunk_dedup_stream(
     current batch's own segment, so a replayed batch reproduces its
     original ledger rather than self-colliding. Per-batch cost: chunk
     the batch (map-side) + one digest-keyed index probe — O(|batch|)
-    plus the index scan, independent of ledger history.
-
-    `timings` (optional test hook): (batch_id, n_rows, seconds)."""
-    import time
-
+    plus the index scan, independent of ledger history."""
     from ..operators import dedup
+    from ..operators.text import cdc_chunk_table
 
+    @nonempty_batch
     def gate(batch_df: DataFrame, batch_id: int) -> None:
-        from ..operators.text import cdc_chunk_table
-
-        t0 = time.monotonic()
-        batch_df.persist()
-        marked = None
+        idx = read_chunk_digest_index(
+            spark, index_path, exclude_batch_id=batch_id
+        )
+        # chunk the batch and probe the index ONCE: the ledger and both
+        # segments derive from the same persisted marked relation. Chunk
+        # with the INDEX'S recorded tokenizer — a lang-aware index must
+        # never take whitespace-chunked segments (and vice versa)
+        marked = dedup.chunk_dedup_marked(
+            idx,
+            cdc_chunk_table(
+                batch_df, tokenizer=chunk_index_tokenizer(index_path)
+            ),
+        ).persist()
         try:
-            n = batch_df.count()
-            if n:
-                idx = read_chunk_digest_index(
-                    spark, index_path, exclude_batch_id=batch_id
-                )
-                # chunk the batch and probe the index ONCE — both the
-                # ledger and the new-digest segment derive from the
-                # same persisted marked relation (pre-share, the
-                # chunking windows and the full base+adds index scan
-                # ran twice per micro-batch). Chunk with the INDEX'S
-                # recorded tokenizer — a lang-aware index must never
-                # take whitespace-chunked segments (and vice versa)
-                marked = dedup.chunk_dedup_marked(
-                    idx,
-                    cdc_chunk_table(
-                        batch_df,
-                        tokenizer=chunk_index_tokenizer(index_path),
-                    ),
-                ).persist()
-                # (threading these three writes A/B'd a wash —
-                # sub-0.5 s jobs; see the decontamination gate note)
-                dedup.ledger_from_marked(marked).write.mode(
-                    "overwrite"
-                ).parquet(
-                    os.path.join(index_path, "ledger", f"batch_id={batch_id}")
-                )
-                # presence segment: the batch's NEW digests (replay-
-                # safe — only first introductions), carrying refcounts
-                dedup.new_digest_refs_from_marked(marked).write.mode(
-                    "overwrite"
-                ).parquet(
-                    os.path.join(index_path, "adds", f"batch_id={batch_id}")
-                )
-                # refcount-only segment: re-references of existing
-                # digests, so a later erasure of the original
-                # contributor cannot GC content this batch still uses
-                dedup.rereference_refs_from_marked(marked).write.mode(
-                    "overwrite"
-                ).parquet(
-                    os.path.join(
-                        index_path, "rerefs", f"batch_id={batch_id}"
-                    )
-                )
-                # re-consent: these subjects' content just re-entered
-                # the index — lift any post-fold erasure suppression
-                # so they can be erased again (idempotent on replay)
-                chunk_index_release_subjects(
-                    spark, index_path, batch_df.select("doc_id")
-                )
+            dedup.ledger_from_marked(marked).write.mode("overwrite").parquet(
+                os.path.join(index_path, "ledger", f"batch_id={batch_id}")
+            )
+            # presence segment: the batch's NEW digests (replay-safe —
+            # only first introductions), carrying refcounts
+            dedup.new_digest_refs_from_marked(marked).write.mode(
+                "overwrite"
+            ).parquet(os.path.join(index_path, "adds", f"batch_id={batch_id}"))
+            # refcount-only segment: re-references of existing digests,
+            # so a later erasure of the original contributor cannot GC
+            # content this batch still uses
+            dedup.rereference_refs_from_marked(marked).write.mode(
+                "overwrite"
+            ).parquet(
+                os.path.join(index_path, "rerefs", f"batch_id={batch_id}")
+            )
         finally:
-            if marked is not None:
-                marked.unpersist()
-            batch_df.unpersist()
-        if timings is not None:
-            timings.append((batch_id, n, time.monotonic() - t0))
+            marked.unpersist()
+        # re-consent: these subjects' content just re-entered the index
+        # — lift any post-fold erasure suppression so they can be erased
+        # again (idempotent on replay)
+        release_erased_subjects(spark, index_path, batch_df.select("doc_id"))
 
     return start_gate(doc_stream, gate, checkpoint_dir)
 
@@ -1021,8 +962,7 @@ def chunk_index_erase(
     foreachBatch idempotence; None → a fresh uuid (NOT max+1 over a
     directory listing — two concurrent un-keyed erases would race
     the listing, allocate the same segment, and one overwrite the
-    other; VERDICT r9 #1, the manifest_erase discipline applied
-    here).
+    other — the manifest_erase discipline applied here).
 
     Repeat-request safety: refcounts alone cannot tell a NEW erasure
     from a REPEAT of one already folded (the fold removed the
@@ -1055,7 +995,7 @@ def chunk_index_erase(
         .groupBy("doc_id", "digest")
         .agg(F.count(F.lit(1)).cast("long").alias("refs"))
     )
-    known = _known_erased_subjects(spark, index_path, exclude=seg_id)
+    known = _known_erased_subjects(spark, index_path, "erases", exclude=seg_id)
     if known is not None:
         delta = delta.join(F.broadcast(known), "doc_id", "left_anti")
     delta.write.mode("overwrite").parquet(
@@ -1064,9 +1004,9 @@ def chunk_index_erase(
     written = _rp(spark, 
         os.path.join(er_dir, f"seg_id={seg_id}")
     )
-    # one pass for all three segment stats (was three separate
-    # count jobs — r12: the audit queries chain many request-sized
-    # lifecycle calls, so per-call job count is the wall)
+    # one pass for all three segment stats: the audit queries chain
+    # many request-sized lifecycle calls, so per-call job count is
+    # the wall
     st = written.agg(
         F.countDistinct("doc_id").alias("n_subjects"),
         F.countDistinct("digest").alias("n_digests"),
@@ -1076,8 +1016,8 @@ def chunk_index_erase(
     return {
         "seg_id": seg_id,
         "n_subjects": n_subjects,
-        # surfaced so callers can DETECT a dropped repeat request
-        # (ADVICE r7) — nonzero means some named subjects were
+        # surfaced so callers can DETECT a dropped repeat request —
+        # nonzero means some named subjects were
         # already pending or suppressed-after-fold and this request
         # was a no-op for them
         "n_suppressed": n_requested - n_subjects,
@@ -1111,22 +1051,25 @@ def _committed_segment_dirs(
 
 
 def _known_erased_subjects(
-    spark: SparkSession, index_path: str, exclude=None
+    spark: SparkSession, path: str, pending: str, exclude=None
 ) -> DataFrame | None:
-    """doc_ids already covered by a pending erase segment or the
-    folded-subject suppression ledger — requests naming them again
-    are no-ops."""
+    """doc_ids already covered by a pending erase segment under
+    `path/pending` (the chunk index's `erases`, the manifest's
+    `erase_subjects` sidecars) or by the folded-subject suppression
+    ledger `erased_subjects/` — requests naming them again are
+    no-ops."""
     from ..operators.artifact_lifecycle import recover_torn_swap
     from ..operators.dedup import require_local_index_path
 
-    require_local_index_path("_known_erased_subjects", index_path)
-    recover_torn_swap(index_path, "erased_subjects")
-    parts = []
-    for seg in _committed_segment_dirs(
-        os.path.join(index_path, "erases"), exclude=exclude
-    ):
-        parts.append(_rp(spark, seg).select("doc_id"))
-    led = os.path.join(index_path, "erased_subjects")
+    require_local_index_path("_known_erased_subjects", path)
+    recover_torn_swap(path, "erased_subjects")
+    parts = [
+        _rp(spark, seg).select("doc_id")
+        for seg in _committed_segment_dirs(
+            os.path.join(path, pending), exclude=exclude
+        )
+    ]
+    led = os.path.join(path, "erased_subjects")
     if os.path.isdir(led) and os.listdir(led):
         parts.append(_rp(spark, led).select("doc_id"))
     if not parts:
@@ -1145,7 +1088,7 @@ def chunk_index_compact(spark: SparkSession, index_path: str) -> dict:
     construction — the serving read already aggregated the same
     ledgers.
 
-    CRASH-FENCED (VERDICT r8 #1) via the shared epoch-marker
+    CRASH-FENCED via the shared epoch-marker
     protocol (operators/artifact_lifecycle.py): segments are
     enumerated into a pending marker first, the fold reads ONLY the
     listed segments, the target epoch publishes atomically with the
@@ -1159,14 +1102,14 @@ def chunk_index_compact(spark: SparkSession, index_path: str) -> dict:
     Suppression-ledger append happens BEFORE the publish and
     EXCLUDES any erase-segment subject whose doc_id re-entered via a
     stream batch whose adds/rerefs segments are in this same fold
-    (ADVICE r8, medium — the interleaving gap): such a subject's
+    (the interleaving gap): such a subject's
     re-added refs demonstrably survive the fold, so suppressing it
     would make the live re-added content permanently unerasable. The
     re-entry evidence is the stream's own `ledger/batch_id=N` rows
     for the folded batch ids — doc-level bookkeeping the gate
     already writes. On roll-back the extra ledger rows are harmless:
     the pending erase segments still suppress repeats, and
-    chunk_index_release_subjects lifts them on any later re-entry."""
+    release_erased_subjects lifts them on any later re-entry."""
     import uuid
 
     from ..operators import artifact_lifecycle as alc
@@ -1261,33 +1204,36 @@ def chunk_index_compact(spark: SparkSession, index_path: str) -> dict:
     }
 
 
-def chunk_index_release_subjects(
-    spark: SparkSession, index_path: str, doc_ids: DataFrame
+def release_erased_subjects(
+    spark: SparkSession, path: str, doc_ids: DataFrame
 ) -> dict:
-    """RE-CONSENT on the chunk-digest index: drop the given subjects
-    from the `erased_subjects/` suppression ledger so they become
-    erasable AGAIN. Without this, the ledger is permanent — a subject
-    whose content legitimately re-enters via an adds segment could
-    never be re-erased, because chunk_index_erase's anti-join would
-    silently drop every later request, leaving the re-added refs
-    alive forever (ADVICE r7). run_chunk_dedup_stream calls this for
-    each micro-batch's doc_ids: content re-entering IS the
-    re-consent event, and the new adds/rerefs segments carry exactly
-    the refcounts a future erase of the same subject will decrement.
+    """RE-CONSENT on an artifact with a subject-suppression ledger (the
+    chunk-digest index, the manifest): drop the given subjects from
+    `erased_subjects/` so they become erasable AGAIN. Without this,
+    the ledger is permanent — a subject whose content legitimately
+    re-enters via an adds segment could never be re-erased, because
+    the erase's anti-join would silently drop every later request,
+    leaving the re-added content alive forever. Both artifacts' stream
+    gates call this for each micro-batch's doc_ids: content
+    re-entering IS the re-consent event, and the new adds segments
+    carry exactly what a future erase of the same subject removes.
 
-    Idempotent (anti-join removal), replay-safe, and rename-swap
-    published; a ledger emptied entirely is DELETED (missing dir ==
-    empty ledger) rather than written as a schema-less parquet dir.
-    Cost: one subject-sized ledger rewrite, skipped when no ledger
-    exists or no overlap."""
+    A torn ledger swap is recovered first, so a crash between the swap's
+    two renames cannot hide the ledger and skip the release. Idempotent
+    (anti-join removal), replay-safe, and rename-swap published; a
+    ledger emptied entirely is DELETED (missing dir == empty ledger)
+    rather than written as a schema-less parquet dir. Cost: one
+    subject-sized ledger rewrite, skipped when no ledger exists or no
+    overlap."""
+    import shutil
     import uuid
 
     from ..operators import artifact_lifecycle as alc
     from ..operators.dedup import require_local_index_path
 
-    require_local_index_path("chunk_index_release_subjects", index_path)
-    alc.recover_torn_swap(index_path, "erased_subjects")
-    led = os.path.join(index_path, "erased_subjects")
+    require_local_index_path("release_erased_subjects", path)
+    alc.recover_torn_swap(path, "erased_subjects")
+    led = os.path.join(path, "erased_subjects")
     if not (os.path.isdir(led) and os.listdir(led)):
         return {"n_released": 0}
     ledger = _rp(spark, led).select("doc_id").distinct()
@@ -1297,18 +1243,14 @@ def chunk_index_release_subjects(
         return {"n_released": 0}
     kept = ledger.join(F.broadcast(ids), "doc_id", "left_anti")
     if kept.isEmpty():
-        import shutil
-
         shutil.rmtree(led, ignore_errors=True)
         return {"n_released": n_released}
-    scratch = os.path.join(
-        index_path, f".erased_subjects_{uuid.uuid4().hex}"
-    )
+    scratch = os.path.join(path, f".erased_subjects_{uuid.uuid4().hex}")
     kept.write.parquet(scratch)
     # fenced swap: a crash between the two renames must never leave
     # the ledger MISSING (== no suppression — repeats would
     # double-apply); recovery rolls to scratch or back to old
-    alc.atomic_swap_dir(index_path, "erased_subjects", scratch)
+    alc.atomic_swap_dir(path, "erased_subjects", scratch)
     return {"n_released": n_released}
 
 
@@ -1320,7 +1262,6 @@ def run_near_dup_monitor_stream(
     out_dir: str,
     checkpoint_dir: str,
     jaccard_threshold: float = 0.6,
-    timings: list | None = None,
 ):
     """Streaming near-dup LEAKAGE MONITOR: every micro-batch of
     incoming documents is probed against the MAINTAINED band index
@@ -1336,12 +1277,7 @@ def run_near_dup_monitor_stream(
     overwrite). Per-batch cost: band the batch + one broadcast probe
     join + Jaccard verify on candidates — O(|batch|)-driven; the
     corpus is touched only through the precomputed index and the
-    shingle fetch of candidate partners.
-
-    `timings` (optional test hook): (batch_id, n_docs, n_pairs,
-    seconds)."""
-    import time
-
+    shingle fetch of candidate partners."""
     from ..operators import dedup
 
     # the probed corpus is STATIC across the stream — shingle it once
@@ -1356,34 +1292,18 @@ def run_near_dup_monitor_stream(
     ).localCheckpoint(eager=True)
     dedup._sh_ckpt_cache.append(corpus_sh)
 
+    @nonempty_batch
     def gate(batch_df: DataFrame, batch_id: int) -> None:
-        t0 = time.monotonic()
-        batch_df.persist()
-        n_pairs = 0
-        try:
-            n = batch_df.count()
-            if n:
-                pairs = dedup.incremental_near_dups_indexed(
-                    spark,
-                    band_index_path,
-                    corpus,
-                    batch_df,
-                    jaccard_threshold,
-                    corpus_sh=corpus_sh,
-                )
-                pairs.write.mode("overwrite").parquet(
-                    os.path.join(out_dir, "pairs", f"batch_id={batch_id}")
-                )
-                if timings is not None:
-                    n_pairs = _rp(spark, 
-                        os.path.join(
-                            out_dir, "pairs", f"batch_id={batch_id}"
-                        )
-                    ).count()
-        finally:
-            batch_df.unpersist()
-        if timings is not None:
-            timings.append((batch_id, n, n_pairs, time.monotonic() - t0))
+        dedup.incremental_near_dups_indexed(
+            spark,
+            band_index_path,
+            corpus,
+            batch_df,
+            jaccard_threshold,
+            corpus_sh=corpus_sh,
+        ).write.mode("overwrite").parquet(
+            os.path.join(out_dir, "pairs", f"batch_id={batch_id}")
+        )
 
     return start_gate(doc_stream, gate, checkpoint_dir)
 
@@ -1395,7 +1315,6 @@ def run_decontamination_stream(
     out_dir: str,
     checkpoint_dir: str,
     n: int | None = None,
-    timings: list | None = None,
 ):
     """Benchmark decontamination as an INGEST GATE (the
     decontamination family's streaming twin; the batch audit is
@@ -1419,83 +1338,53 @@ def run_decontamination_stream(
     overwrite). Per-batch cost: n-gram fan-out of the batch + one
     broadcast semi-join + per-source aggregate — O(|batch|); the
     benchmark set is precomputed by the caller (persist it — it is
-    probed every batch) and the corpus is never touched.
-
-    `timings` (optional test hook): (batch_id, n_docs, n_flagged,
-    seconds)."""
-    import time
-
+    probed every batch) and the corpus is never touched."""
     from ..operators import text as text_ops
 
     n = text_ops.BENCH_NGRAM_N if n is None else n
 
+    @nonempty_batch
     def gate(batch_df: DataFrame, batch_id: int) -> None:
-        t0 = time.monotonic()
-        batch_df.persist()
-        n_docs = n_flagged = 0
+        flagged = text_ops.flag_contaminated(
+            batch_df, bench_grams, n, fan=False
+        ).persist()
+        hit = F.coalesce(F.col("hit"), F.lit(0))
         try:
-            n_docs = batch_df.count()
-            if not n_docs:
-                return
-            flagged = text_ops.flag_contaminated(
-                batch_df, bench_grams, n, fan=False
-            ).persist()
-            try:
-                report = (
-                    batch_df.join(
-                        flagged.withColumn("hit", F.lit(1)),
-                        "doc_id",
-                        "left",
-                    )
-                    .groupBy("source")
-                    .agg(
-                        F.count(F.lit(1)).cast("long").alias("n_docs"),
-                        F.sum(F.coalesce(F.col("hit"), F.lit(0)))
-                        .cast("long")
-                        .alias("n_contaminated"),
-                        (
-                            F.floor(
-                                F.sum(F.coalesce(F.col("hit"), F.lit(0)))
-                                / F.count(F.lit(1))
-                                * 10000
-                                + 0.5
-                            ).cast("long")
-                            / 10000.0
-                        ).alias("contamination_rate"),
-                    )
+            report = (
+                batch_df.join(
+                    flagged.withColumn("hit", F.lit(1)), "doc_id", "left"
                 )
-                # NOTE: threading these three writes was A/B'd a
-                # WASH — each is a sub-0.5 s batch-sized job, and the
-                # pool's py4j contention eats the overlap (unlike the
-                # ingest fan-out gate, whose three landings are heavy
-                # enough to profit). Kept serial deliberately.
-                report.write.mode("overwrite").parquet(
-                    os.path.join(out_dir, "report", f"batch_id={batch_id}")
+                .groupBy("source")
+                .agg(
+                    F.count(F.lit(1)).cast("long").alias("n_docs"),
+                    F.sum(hit).cast("long").alias("n_contaminated"),
+                    (
+                        F.floor(
+                            F.sum(hit) / F.count(F.lit(1)) * 10000 + 0.5
+                        ).cast("long")
+                        / 10000.0
+                    ).alias("contamination_rate"),
                 )
-                batch_df.join(flagged, "doc_id", "left_anti").write.mode(
-                    "overwrite"
-                ).parquet(
-                    os.path.join(
-                        out_dir, "admitted", f"batch_id={batch_id}"
-                    )
-                )
-                batch_df.join(flagged, "doc_id", "left_semi").write.mode(
-                    "overwrite"
-                ).parquet(
-                    os.path.join(
-                        out_dir, "quarantine", f"batch_id={batch_id}"
-                    )
-                )
-                if timings is not None:
-                    n_flagged = flagged.count()
-            finally:
-                flagged.unpersist()
+            )
+            # the three writes run serially: each is a sub-0.5 s
+            # batch-sized job, and a thread pool's py4j contention eats
+            # the overlap (unlike run_ingest_fanout_stream's landings,
+            # which are heavy enough to profit)
+            report.write.mode("overwrite").parquet(
+                os.path.join(out_dir, "report", f"batch_id={batch_id}")
+            )
+            batch_df.join(flagged, "doc_id", "left_anti").write.mode(
+                "overwrite"
+            ).parquet(
+                os.path.join(out_dir, "admitted", f"batch_id={batch_id}")
+            )
+            batch_df.join(flagged, "doc_id", "left_semi").write.mode(
+                "overwrite"
+            ).parquet(
+                os.path.join(out_dir, "quarantine", f"batch_id={batch_id}")
+            )
         finally:
-            batch_df.unpersist()
-            if timings is not None:
-                timings.append(
-                    (batch_id, n_docs, n_flagged, time.monotonic() - t0)
-                )
+            flagged.unpersist()
 
     return start_gate(doc_stream, gate, checkpoint_dir)
 
@@ -1508,7 +1397,6 @@ def run_cluster_update_stream(
     labels_path: str,
     checkpoint_dir: str,
     jaccard_threshold: float = 0.6,
-    timings: list | None = None,
 ):
     """Streaming maintenance of the CLUSTER artifact — the full
     near-dup lifecycle as a service: each micro-batch (1) publishes
@@ -1526,21 +1414,15 @@ def run_cluster_update_stream(
     re-folding its own pairs cannot change any component; the segment
     writes are batch-keyed overwrites as everywhere else. Cross-batch
     duplicates (batch j near-duplicating batch i < j) are found
-    because batch i's bands already sit in the index when j probes.
-
-    `timings` (optional test hook): (batch_id, n_docs, n_pairs,
-    seconds)."""
-    import shutil
-    import time
+    because batch i's bands already sit in the index when j probes."""
     import uuid
 
+    from ..operators import artifact_lifecycle as alc
     from ..operators import dedup
 
     # the seed corpus is STATIC across the stream — shingle it once
     # (eager ckpt in the bounded FIFO); per micro-batch only the
     # published doc segments + the batch itself are shingled fresh
-    # (pre-share, every batch's verify re-derived the corpus
-    # shingle stage 3×)
     _mode = dedup.band_index_tokenizer(band_index_path)
     while len(dedup._sh_ckpt_cache) >= dedup._SH_CKPT_KEEP:
         dedup._sh_ckpt_cache.pop(0).unpersist()
@@ -1549,105 +1431,76 @@ def run_cluster_update_stream(
     )
     dedup._sh_ckpt_cache.append(corpus_sh)
 
+    @nonempty_batch
     def gate(batch_df: DataFrame, batch_id: int) -> None:
-        t0 = time.monotonic()
-        batch_df.persist()
-        n_pairs = 0
-        try:
-            n = batch_df.count()
-            if n:
-                # (1) publish this batch's bands + docs (idempotent;
-                # threading this pair A/B'd a wash — see the
-                # decontamination gate note)
-                dedup.band_index_add(
-                    spark, band_index_path, batch_df, batch_id
-                )
-                batch_df.write.mode("overwrite").parquet(
-                    os.path.join(
-                        labels_path, "docs", f"batch_id={batch_id}"
-                    )
-                )
-                # (2) probe base ∪ segments; shingle-verify needs the
-                # candidate partners' TEXT — corpus plus every doc
-                # segment published so far. The CURRENT batch's
-                # segment is excluded from the store: the probe
-                # unions `batch_df` itself, so the segment copy only
-                # duplicated those rows (collapsed downstream by
-                # distinct before), and corpus_sh's disjointness
-                # contract forbids a doc's shingles appearing twice.
-                docs_dir = os.path.join(labels_path, "docs")
-                prior_segs = (
-                    spark.read.option("basePath", docs_dir)
-                    .parquet(docs_dir)
-                    .filter(F.col("batch_id") != batch_id)
-                    .select(*corpus.columns)
-                )
-                store = corpus.unionByName(prior_segs)
-                # fan=False: the published segments are micro-batch-
-                # sized — no parallelism-floor probe per batch
-                store_sh = corpus_sh.unionByName(
-                    dedup._band_shingles(prior_segs, _mode, fan=False)
-                )
-                pairs = dedup.incremental_near_dups_indexed(
-                    spark,
-                    band_index_path,
-                    store,
-                    batch_df,
-                    jaccard_threshold,
-                    corpus_sh=store_sh,
-                ).filter(F.col("doc_a") != F.col("doc_b"))
-                # (3) fold into the maintained labels (fenced swap)
-                from ..operators import artifact_lifecycle as alc
-
-                alc.recover_torn_swap(labels_path, "labels")
-                cur = os.path.join(labels_path, "labels")
-                seeded = os.path.join(labels_path, "_labels_seeded")
-                if os.path.isdir(cur):
-                    prev = _rp(spark, cur)
-                elif os.path.exists(seeded):
-                    # the artifact has published before but the
-                    # labels dir is gone AND recover_torn_swap found
-                    # no repairable marker state — external deletion
-                    # or pre-fence wreckage. Silently starting from
-                    # empty would rebuild labels from only THIS
-                    # batch's pairs, discarding all corpus
-                    # clustering (ADVICE r7); fail loudly (a torn
-                    # FENCED swap never reaches here — recovery
-                    # rolls it to scratch or old automatically).
-                    raise RuntimeError(
-                        "labels artifact missing but its seed marker "
-                        f"exists under {labels_path!r} — refusing to "
-                        "rebuild from one batch; restore the "
-                        "pre-swap .labels_old_* directory to "
-                        "labels/ (or delete the _labels_seeded "
-                        "marker to intentionally start over)."
-                    )
-                else:
-                    prev = spark.createDataFrame(
-                        [], "doc_id long, cluster_id long"
-                    )
-                new_labels = dedup.incremental_near_dup_clusters(
-                    prev, pairs.select("doc_a", "doc_b")
-                )
-                scratch = os.path.join(
-                    labels_path, f".labels_{uuid.uuid4().hex}"
-                )
-                new_labels.write.parquet(scratch)
-                if timings is not None:
-                    n_pairs = pairs.count()
-                # seed marker BEFORE the swap: from here on, a
-                # missing labels dir is a torn publish, never a
-                # legitimate first batch
-                with open(seeded, "w") as fh:
-                    fh.write("1")
-                # fenced swap: a crash between the renames self-heals
-                # on the next lifecycle entry (round 9 — the loud-fail
-                # above remains only for non-swap wreckage)
-                alc.atomic_swap_dir(labels_path, "labels", scratch)
-        finally:
-            batch_df.unpersist()
-        if timings is not None:
-            timings.append((batch_id, n, n_pairs, time.monotonic() - t0))
+        # (1) publish this batch's bands + docs (idempotent)
+        dedup.band_index_add(spark, band_index_path, batch_df, batch_id)
+        batch_df.write.mode("overwrite").parquet(
+            os.path.join(labels_path, "docs", f"batch_id={batch_id}")
+        )
+        # (2) probe base ∪ segments; shingle-verify needs the candidate
+        # partners' TEXT — corpus plus every doc segment published so
+        # far. The CURRENT batch's segment is excluded from the store:
+        # the probe unions `batch_df` itself, and corpus_sh's
+        # disjointness contract forbids a doc's shingles appearing twice.
+        docs_dir = os.path.join(labels_path, "docs")
+        prior_segs = (
+            spark.read.option("basePath", docs_dir)
+            .parquet(docs_dir)
+            .filter(F.col("batch_id") != batch_id)
+            .select(*corpus.columns)
+        )
+        store = corpus.unionByName(prior_segs)
+        # fan=False: the published segments are micro-batch-sized — no
+        # parallelism-floor probe per batch
+        store_sh = corpus_sh.unionByName(
+            dedup._band_shingles(prior_segs, _mode, fan=False)
+        )
+        pairs = dedup.incremental_near_dups_indexed(
+            spark,
+            band_index_path,
+            store,
+            batch_df,
+            jaccard_threshold,
+            corpus_sh=store_sh,
+        ).filter(F.col("doc_a") != F.col("doc_b"))
+        # (3) fold into the maintained labels (fenced swap)
+        alc.recover_torn_swap(labels_path, "labels")
+        cur = os.path.join(labels_path, "labels")
+        seeded = os.path.join(labels_path, "_labels_seeded")
+        if os.path.isdir(cur):
+            prev = _rp(spark, cur)
+        elif os.path.exists(seeded):
+            # the artifact has published before but the labels dir is
+            # gone AND recover_torn_swap found no repairable marker
+            # state — external deletion or pre-fence wreckage. Silently
+            # starting from empty would rebuild labels from only THIS
+            # batch's pairs, discarding all corpus clustering; fail
+            # loudly (a torn FENCED swap never reaches here — recovery
+            # rolls it to scratch or old automatically).
+            raise RuntimeError(
+                "labels artifact missing but its seed marker "
+                f"exists under {labels_path!r} — refusing to "
+                "rebuild from one batch; restore the "
+                "pre-swap .labels_old_* directory to "
+                "labels/ (or delete the _labels_seeded "
+                "marker to intentionally start over)."
+            )
+        else:
+            prev = spark.createDataFrame([], "doc_id long, cluster_id long")
+        new_labels = dedup.incremental_near_dup_clusters(
+            prev, pairs.select("doc_a", "doc_b")
+        )
+        scratch = os.path.join(labels_path, f".labels_{uuid.uuid4().hex}")
+        new_labels.write.parquet(scratch)
+        # seed marker BEFORE the swap: from here on, a missing labels
+        # dir is a torn publish, never a legitimate first batch
+        with open(seeded, "w") as fh:
+            fh.write("1")
+        # fenced swap: a crash between the renames self-heals on the
+        # next lifecycle entry (the loud-fail above remains only for
+        # non-swap wreckage)
+        alc.atomic_swap_dir(labels_path, "labels", scratch)
 
     return start_gate(doc_stream, gate, checkpoint_dir)
 
@@ -1673,7 +1526,6 @@ def cluster_labels_erase_artifact(
     clusters and republishes identical labels. Cost: one broadcast
     anti-join scan of the artifact + a member-local re-pair bounded
     by the touched clusters' sizes."""
-    import shutil
     import uuid
 
     from ..operators.dedup import (
@@ -2034,7 +1886,6 @@ def run_boilerplate_scrub_stream(
     template_path: str,
     cleaned_dir: str,
     checkpoint_dir: str,
-    timings: list | None = None,
 ):
     """Streaming boilerplate scrub against the MAINTAINED template
     artifact (text.write_template_index — detected once per corpus
@@ -2045,28 +1896,15 @@ def run_boilerplate_scrub_stream(
     cleaned docs land idempotently (overwrite by batch id). Scrubbing
     is per-doc, so streamed batches against the frozen templates
     equal the one-shot batch scrub of their union — the registered
-    query's oracle IS the batch op's.
-
-    `timings`: optional (batch_id, n_in, n_out, seconds) hook."""
-    import time
-
+    query's oracle IS the batch op's."""
     from ..operators.text import read_template_index, scrub_with_templates
 
     templates = read_template_index(spark, template_path)
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
-        t0 = time.monotonic()
-        cleaned = scrub_with_templates(batch_df, templates)
-        cleaned.write.mode("overwrite").parquet(
-            os.path.join(cleaned_dir, f"batch_id={batch_id}")
-        )
-        if timings is not None:
-            n_out = _rp(spark, 
-                os.path.join(cleaned_dir, f"batch_id={batch_id}")
-            ).count()
-            timings.append(
-                (batch_id, batch_df.count(), n_out, time.monotonic() - t0)
-            )
+        scrub_with_templates(batch_df, templates).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(cleaned_dir, f"batch_id={batch_id}"))
 
     return start_gate(doc_stream, gate, checkpoint_dir)
 
@@ -2320,7 +2158,6 @@ def run_sft_prefix_gate_stream(
     index_path: str,
     out_dir: str,
     checkpoint_dir: str,
-    timings: list | None = None,
 ):
     """Streaming PROMPT-PREFIX dedup gate over the maintained prefix
     index: each micro-batch of conversations (1) probes base ∪ all
@@ -2336,60 +2173,46 @@ def run_sft_prefix_gate_stream(
     Per-batch cost: the batch's per-doc windows + one
     (u_idx, digest)-keyed probe join against the index scan —
     O(|batch|)-driven; prefix groups shuffle digests, never text."""
-    import time
-
     from pyspark.sql import Window
 
     from ..operators.text import sft_prefix_digests
 
+    @nonempty_batch
     def gate(batch_df: DataFrame, batch_id: int) -> None:
-        t0 = time.monotonic()
-        batch_df.persist()
-        pf = None
+        pf = sft_prefix_digests(batch_df).persist()
         try:
-            n = batch_df.count()
-            if n:
-                pf = sft_prefix_digests(batch_df).persist()
-                idx = read_sft_prefix_index(
-                    spark, index_path, exclude_batch_id=batch_id
-                )
-                hits = pf.join(
-                    idx.select(
-                        "u_idx",
-                        "prefix_digest",
-                        F.col("doc_id").alias("partner_id"),
-                    ),
-                    ["u_idx", "prefix_digest"],
-                ).filter(F.col("partner_id") != F.col("doc_id"))
-                per_depth = hits.groupBy("doc_id", "u_idx").agg(
-                    F.count_distinct("partner_id").alias("n_partners")
-                )
-                deepest = per_depth.withColumn(
-                    "rn",
-                    F.row_number().over(
-                        Window.partitionBy("doc_id").orderBy(
-                            F.col("u_idx").desc()
-                        )
-                    ),
-                ).filter(F.col("rn") == 1)
-                # (threading this write pair A/B'd a wash —
-                # sub-0.5 s jobs; see the decontamination gate note)
-                deepest.select(
-                    "doc_id",
-                    F.col("u_idx").cast("long").alias("shared_depth"),
-                    F.col("n_partners").cast("long").alias("n_partners"),
-                ).write.mode("overwrite").parquet(
-                    os.path.join(out_dir, "flags", f"batch_id={batch_id}")
-                )
-                pf.write.mode("overwrite").parquet(
-                    os.path.join(index_path, "adds", f"batch_id={batch_id}")
-                )
+            idx = read_sft_prefix_index(
+                spark, index_path, exclude_batch_id=batch_id
+            )
+            hits = pf.join(
+                idx.select(
+                    "u_idx",
+                    "prefix_digest",
+                    F.col("doc_id").alias("partner_id"),
+                ),
+                ["u_idx", "prefix_digest"],
+            ).filter(F.col("partner_id") != F.col("doc_id"))
+            per_depth = hits.groupBy("doc_id", "u_idx").agg(
+                F.count_distinct("partner_id").alias("n_partners")
+            )
+            deepest = per_depth.withColumn(
+                "rn",
+                F.row_number().over(
+                    Window.partitionBy("doc_id").orderBy(F.col("u_idx").desc())
+                ),
+            ).filter(F.col("rn") == 1)
+            deepest.select(
+                "doc_id",
+                F.col("u_idx").cast("long").alias("shared_depth"),
+                F.col("n_partners").cast("long").alias("n_partners"),
+            ).write.mode("overwrite").parquet(
+                os.path.join(out_dir, "flags", f"batch_id={batch_id}")
+            )
+            pf.write.mode("overwrite").parquet(
+                os.path.join(index_path, "adds", f"batch_id={batch_id}")
+            )
         finally:
-            if pf is not None:
-                pf.unpersist()
-            batch_df.unpersist()
-        if timings is not None:
-            timings.append((batch_id, n, time.monotonic() - t0))
+            pf.unpersist()
 
     return start_gate(conv_stream, gate, checkpoint_dir)
 
@@ -2422,7 +2245,7 @@ def _manifest_shard_rows(
     """Per-shard (n_docs, n_tokens, content_xor) rows for a document
     slice — the manifest's additive/xor terms (text.shard_manifest
     minus the non-invertible id range). `tokenizer` is the EXPLICIT
-    unit (r12): artifact paths pass the recorded mode
+    unit: artifact paths pass the recorded mode
     (manifest_tokenizer); `lang_aware` counts CHARS on the
     NONWS_LANGS partition (text.budget_token_count)."""
     from ..operators.text import (
@@ -2469,8 +2292,8 @@ def build_manifest_artifact(
     segments accumulate until a compaction folds them.
 
     The token-count `tokenizer` is RECORDED in
-    `{path}/_tokenizer.json` (r12 — the recorded-parameter
-    migration: n_tokens is additive across base/adds/erases, so a
+    `{path}/_tokenizer.json` (a recorded parameter: n_tokens is
+    additive across base/adds/erases, so a
     unit flip mid-life would silently mix words and chars; every
     add/erase/verify path reads the recorded mode). The meta lives
     at the artifact root, outside the base/adds/erases lifecycle,
@@ -2494,7 +2317,7 @@ def build_manifest_artifact(
         finish_param_build,
     )
 
-    # build-intent fence (r12): a crash between the base write and
+    # build-intent fence: a crash between the base write and
     # the meta publish must read LOUD, not as the meta-less
     # whitespace fallback (or, on rebuild, the stale old meta).
     begin_param_build(
@@ -2513,7 +2336,7 @@ def build_manifest_artifact(
 def manifest_packing_verify(
     spark: SparkSession, path: str, documents: DataFrame
 ) -> DataFrame:
-    """MANIFEST CONSUMER CLOSURE (round-9 ask #6): shard_manifest
+    """MANIFEST CONSUMER CLOSURE: shard_manifest
     promises "verify a shard without re-reading the corpus" — this
     closes the loop from the consumer's side. Per shard, the SERVED
     manifest row (base ∪ segments, the maintained artifact's fold)
@@ -2532,7 +2355,7 @@ def manifest_packing_verify(
     check at fixture scale."""
     from ..operators.text import sequence_packing_plan, shard_manifest
 
-    # both sides count in the artifact's RECORDED unit (r12) — the
+    # both sides count in the artifact's RECORDED unit — the
     # loader must pack by the same unit the manifest promises, or
     # counts_match would flag every NONWS-bearing shard
     tok = manifest_tokenizer(path)
@@ -2689,12 +2512,12 @@ def run_manifest_update_stream(
     folding only happens at the serving read / compaction. The
     docstring-level contrast with the cluster stream (where
     connected components ARE idempotent under edge re-addition) is
-    the round-8 lesson: choose bookkeeping per operator algebra.
+    the point: choose bookkeeping per operator algebra.
 
     Each batch also lands a `add_subjects/batch_id=N` doc_id sidecar
     and releases its subjects from the erasure-suppression ledger:
     content re-entering IS the re-consent event (the chunk index's
-    discipline, ADVICE r8) — without it, a subject erased and later
+    discipline) — without it, a subject erased and later
     legitimately re-ingested could never be erased again. The
     sidecar is ids-only bookkeeping consulted ONLY at compaction
     (to exclude re-added subjects from the suppression ledger when
@@ -2728,7 +2551,7 @@ def manifest_add_batch(
         docs.select("doc_id").distinct().write.mode("overwrite").parquet(
             os.path.join(path, "add_subjects", f"batch_id={batch_id}")
         )
-        manifest_release_subjects(spark, path, docs.select("doc_id"))
+        release_erased_subjects(spark, path, docs.select("doc_id"))
     finally:
         docs.unpersist()
 
@@ -2756,36 +2579,6 @@ def _manifest_repair_orphan_sidecars(path: str) -> int:
     return n
 
 
-def _known_manifest_erased_subjects(
-    spark: SparkSession, path: str, exclude=None
-) -> DataFrame | None:
-    """doc_ids already covered by a pending erase segment's subject
-    sidecar or the post-fold `erased_subjects/` suppression ledger —
-    a repeat request naming them must be a no-op (the chunk index's
-    `_known_erased_subjects` discipline applied to the manifest)."""
-    import os
-
-    from ..operators.artifact_lifecycle import recover_torn_swap
-
-    recover_torn_swap(path, "erased_subjects")
-    parts = []
-    # committed segments only (_SUCCESS gate) — a concurrent erase's
-    # mid-write sidecar dir would throw on the per-child read
-    for seg in _committed_segment_dirs(
-        os.path.join(path, "erase_subjects"), exclude=exclude
-    ):
-        parts.append(_rp(spark, seg).select("doc_id"))
-    led = os.path.join(path, "erased_subjects")
-    if os.path.isdir(led) and os.listdir(led):
-        parts.append(_rp(spark, led).select("doc_id"))
-    if not parts:
-        return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.distinct()
-
-
 def manifest_erase(
     spark: SparkSession,
     path: str,
@@ -2798,7 +2591,7 @@ def manifest_erase(
     folds the subjects out exactly. Request-sized write, seg-keyed
     for idempotent replay.
 
-    IDEMPOTENT under repeated requests (ADVICE r8, medium): because
+    IDEMPOTENT under repeated requests: because
     xor self-inverts, a duplicate erase segment would double-subtract
     the counts and RE-ADD the erased digests into the serving fold —
     silent corruption. So each segment carries a doc_id subject
@@ -2809,7 +2602,7 @@ def manifest_erase(
 
     `seg_id` default is a uuid, not max+1 over a directory listing —
     two concurrent un-keyed erases can no longer collide on a
-    segment name and overwrite each other (VERDICT r8 #2); pass an
+    segment name and overwrite each other; pass an
     explicit batch-derived key from foreachBatch for replay
     idempotence, exactly as before."""
     import os
@@ -2825,7 +2618,9 @@ def manifest_erase(
         seg_id = uuid.uuid4().hex
     requested = erased_docs.select("doc_id").distinct()
     n_requested = int(requested.count())
-    known = _known_manifest_erased_subjects(spark, path, exclude=seg_id)
+    known = _known_erased_subjects(
+        spark, path, "erase_subjects", exclude=seg_id
+    )
     if known is not None:
         requested = requested.join(
             F.broadcast(known), "doc_id", "left_anti"
@@ -2865,44 +2660,6 @@ def manifest_erase(
     }
 
 
-def manifest_release_subjects(
-    spark: SparkSession, path: str, doc_ids: DataFrame
-) -> dict:
-    """RE-CONSENT on the manifest artifact: drop the given subjects
-    from the `erased_subjects/` suppression ledger so re-ingested
-    content becomes erasable again (chunk_index_release_subjects'
-    contract — idempotent anti-join rewrite, rename-swap published,
-    an emptied ledger is DELETED rather than written empty)."""
-    import os
-    import shutil
-    import uuid
-
-    from ..operators import artifact_lifecycle as alc
-    from ..operators.dedup import require_local_index_path
-
-    require_local_index_path("manifest_release_subjects", path)
-    led = os.path.join(path, "erased_subjects")
-    if not (os.path.isdir(led) and os.listdir(led)):
-        return {"n_released": 0}
-    ledger = _rp(spark, led).select("doc_id").distinct()
-    ids = doc_ids.select("doc_id").distinct()
-    n_released = int(ledger.join(F.broadcast(ids), "doc_id").count())
-    if not n_released:
-        return {"n_released": 0}
-    kept = ledger.join(F.broadcast(ids), "doc_id", "left_anti")
-    if kept.isEmpty():
-        shutil.rmtree(led, ignore_errors=True)
-        return {"n_released": n_released}
-    scratch = os.path.join(
-        path, f".erased_subjects_{uuid.uuid4().hex}"
-    )
-    kept.write.parquet(scratch)
-    # fenced swap (see chunk_index_release_subjects): a torn swap
-    # must never read as an EMPTY suppression ledger
-    alc.atomic_swap_dir(path, "erased_subjects", scratch)
-    return {"n_released": n_released}
-
-
 def manifest_compact(
     spark: SparkSession, path: str, snapshot: bool = False
 ) -> dict:
@@ -2912,7 +2669,7 @@ def manifest_compact(
     schema-bearing — but an artifact for an empty corpus is better
     deleted; the count is surfaced so callers can decide.
 
-    CRASH-FENCED (VERDICT r8 #1) via the shared epoch-marker
+    CRASH-FENCED via the shared epoch-marker
     protocol (operators/artifact_lifecycle.py): the segment list is
     recorded in a pending marker BEFORE the fold, the fold reads
     ONLY the listed segments, the target epoch publishes atomically
@@ -2921,7 +2678,7 @@ def manifest_compact(
     ledger retirement can no longer double-fold the counts or
     xor-cancel the digests.
 
-    Suppression-ledger ordering (ADVICE r8, interleaving gap): the
+    Suppression-ledger ordering (the interleaving gap): the
     folded erase segments' subjects append to `erased_subjects/`
     BEFORE the publish, EXCLUDING any subject whose doc_id also
     appears in an add-subject sidecar being folded — such a

@@ -1,10 +1,12 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# import the package of this checkout, not an installed or sibling copy
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from development_of_a_real_time_data_pipeline_for_user_profile_analysis_spark.session import (  # noqa: E402
     get_spark,

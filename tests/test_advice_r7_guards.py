@@ -12,7 +12,7 @@
 3. Re-consent on the chunk-digest index: a subject folded into the
    `erased_subjects/` suppression ledger whose content legitimately
    re-enters via an adds segment becomes erasable AGAIN
-   (chunk_index_release_subjects), and a dropped repeat request is
+   (release_erased_subjects), and a dropped repeat request is
    DETECTABLE via the surfaced `n_suppressed` counter.
 4. Labels seed marker: once the cluster-labels artifact has
    published, a missing labels dir is a torn rename-swap and the
@@ -41,7 +41,7 @@ from development_of_a_real_time_data_pipeline_for_user_profile_analysis_spark.st
     build_chunk_digest_index,
     chunk_index_compact,
     chunk_index_erase,
-    chunk_index_release_subjects,
+    release_erased_subjects,
     run_cluster_update_stream,
 )
 from development_of_a_real_time_data_pipeline_for_user_profile_analysis_spark.operators.text import (
@@ -77,7 +77,7 @@ def test_every_segment_reader_refuses_uri_paths(spark):
         ),
         lambda p: similarity.ivfpq_compact_segments(spark, p),
         lambda p: chunk_index_erase(spark, p, None),
-        lambda p: chunk_index_release_subjects(spark, p, one_doc),
+        lambda p: release_erased_subjects(spark, p, one_doc),
         lambda p: chunk_index_compact(spark, p),
     ]
     for call in calls:
@@ -165,7 +165,7 @@ def test_chunk_index_reconsent_release(spark, tmp_path):
     n_a = a_digests.count()
 
     # no ledger yet: release is a no-op
-    assert chunk_index_release_subjects(
+    assert release_erased_subjects(
         spark, path, docs.select("doc_id")
     ) == {"n_released": 0}
 
@@ -191,13 +191,13 @@ def test_chunk_index_reconsent_release(spark, tmp_path):
     dedup.new_digest_refs_from_marked(marked).write.mode(
         "overwrite"
     ).parquet(f"{path}/adds/batch_id=0")
-    assert chunk_index_release_subjects(
+    assert release_erased_subjects(
         spark, path, batch.select("doc_id")
     ) == {"n_released": 1}
     # ledger emptied entirely → deleted, not left as schema-less dir
     assert not os.path.isdir(f"{path}/erased_subjects")
     # idempotent on replay
-    assert chunk_index_release_subjects(
+    assert release_erased_subjects(
         spark, path, batch.select("doc_id")
     ) == {"n_released": 0}
 

@@ -23,6 +23,7 @@ from development_of_a_real_time_data_pipeline_for_user_profile_analysis_spark.so
 )
 from development_of_a_real_time_data_pipeline_for_user_profile_analysis_spark.streaming.pipeline import (
     build_chunk_digest_index,
+    drain,
     run_chunk_dedup_stream,
 )
 
@@ -79,7 +80,7 @@ def streamed_dedup(spark, sf_dir, tmp_path_factory):
         index_path,
         str(tmp_path_factory.mktemp("chunk_ckpt")),
     )
-    q.awaitTermination(300)
+    drain(q, "chunk-dedup")
     return index_path, in_dir, (b0, b1, b2), docs
 
 
@@ -140,7 +141,7 @@ def test_replay_with_fresh_checkpoint_is_idempotent(
         index_path,
         str(tmp_path_factory.mktemp("chunk_ckpt_replay")),
     )
-    q.awaitTermination(300)
+    drain(q, "chunk-dedup replay")
     after = [_ledger_rows(spark, index_path, i) for i in range(3)]
     assert after == before
 

@@ -104,7 +104,7 @@ def test_chunk_concurrent_unkeyed_erases_do_not_collide(spark, tmp_path):
     assert sum(r["n_subjects"] for r in results) == 8
     # the pending-subject ledger covers BOTH requests — a repeat of
     # either is suppressed, and compaction folds the union out
-    pending = pipeline._known_erased_subjects(spark, path)
+    pending = pipeline._known_erased_subjects(spark, path, "erases")
     assert {r.doc_id for r in pending.collect()} == set(range(8))
     pipeline.chunk_index_compact(spark, path)
     base = spark.read.parquet(os.path.join(path, "base"))
@@ -153,11 +153,11 @@ def test_known_subjects_skip_uncommitted_segment_dirs(spark, tmp_path):
     # plant the mid-write state a concurrent erase exposes
     torn = os.path.join(cidx, "erases", "seg_id=racing", "_temporary", "0")
     os.makedirs(torn)
-    known = pipeline._known_erased_subjects(spark, cidx)
+    known = pipeline._known_erased_subjects(spark, cidx, "erases")
     assert {r.doc_id for r in known.collect()} == {0, 1, 2}
 
     from development_of_a_real_time_data_pipeline_for_user_profile_analysis_spark.streaming.pipeline import (
-        _known_manifest_erased_subjects,
+        _known_erased_subjects,
         build_manifest_artifact,
         manifest_erase,
     )
@@ -168,7 +168,7 @@ def test_known_subjects_skip_uncommitted_segment_dirs(spark, tmp_path):
     os.makedirs(
         os.path.join(m, "erase_subjects", "seg_id=racing", "_temporary")
     )
-    mk = _known_manifest_erased_subjects(spark, m)
+    mk = _known_erased_subjects(spark, m, "erase_subjects")
     assert {r.doc_id for r in mk.collect()} == {0, 1}
 
 

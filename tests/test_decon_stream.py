@@ -26,6 +26,7 @@ from development_of_a_real_time_data_pipeline_for_user_profile_analysis_spark.op
     text,
 )
 from development_of_a_real_time_data_pipeline_for_user_profile_analysis_spark.streaming.pipeline import (
+    drain,
     run_decontamination_stream,
 )
 
@@ -91,12 +92,9 @@ def _run(spark, in_dir, bench_grams, out_dir, ckpt):
         .option("maxFilesPerTrigger", 1)
         .parquet(in_dir)
     )
-    timings = []
-    q = run_decontamination_stream(
-        spark, stream, bench_grams, out_dir, ckpt, n=N, timings=timings
-    )
-    assert q.awaitTermination(300), q.exception()
-    return timings
+    q = run_decontamination_stream(spark, stream, bench_grams, out_dir, ckpt, n=N)
+    drain(q, "decontamination")
+    return q
 
 
 def _read(spark, out_dir, sub):
@@ -111,8 +109,8 @@ def test_gate_flags_match_batch_rule_and_ledgers_partition(
 ):
     in_dir, bench_grams, root = fixture
     out = f"{root}/out1"
-    timings = _run(spark, in_dir, bench_grams, out, f"{root}/ckpt1")
-    assert [t[0] for t in timings] == [0, 1]
+    q = _run(spark, in_dir, bench_grams, out, f"{root}/ckpt1")
+    assert [p["batchId"] for p in q.recentProgress if p["numInputRows"]] == [0, 1]
 
     quarantined = {
         (r.batch_id, r.doc_id)

@@ -93,7 +93,7 @@ def test_manifest_erase_repeat_requests_are_suppressed(spark, tmp_path):
 def test_manifest_reingest_releases_suppression(spark, tmp_path):
     """Re-consent through the UPDATE STREAM: after erase+compact, the
     subject's content legitimately re-enters via a micro-batch — the
-    gate's manifest_release_subjects lifts the suppression, so a
+    gate's release_erased_subjects lifts the suppression, so a
     LATER erase request applies instead of being dropped forever
     (the ADVICE r8 unerasable-live-content hazard, manifest edition).
     """
@@ -263,7 +263,7 @@ def test_chunk_index_interleaved_reentry_stays_erasable(spark, tmp_path):
     dedup.ledger_from_marked(marked).write.parquet(
         os.path.join(path, "ledger", "batch_id=1")
     )
-    pipeline.chunk_index_release_subjects(
+    pipeline.release_erased_subjects(
         spark, path, subj.select("doc_id")
     )  # ledger doesn't exist yet — the no-op that opened the gap
 
@@ -351,3 +351,41 @@ def test_suppression_ledger_swap_is_crash_fenced(spark, tmp_path):
     assert alc.recover_torn_swap(path, "erased_subjects") == "rolled_back"
     st2 = pipeline.manifest_erase(spark, path, erase)
     assert st2["n_suppressed"] == 6
+
+
+def test_manifest_release_recovers_a_torn_ledger_swap(spark, tmp_path):
+    """Re-ingesting a subject while the suppression ledger's swap is
+    torn (ledger renamed away, marker pending) must still release it:
+    the release recovers the swap first instead of reading the missing
+    ledger as empty and leaving the subject suppressed once a later
+    entry restores the ledger."""
+    import json
+    import shutil
+
+    docs = _docs(spark, range(30))
+    erase = _docs(spark, range(0, 6))
+    path = str(tmp_path / "m")
+    pipeline.build_manifest_artifact(docs, path)
+    pipeline.manifest_erase(spark, path, erase)
+    pipeline.manifest_compact(spark, path)
+    led = os.path.join(path, "erased_subjects")
+    shutil.copytree(led, os.path.join(path, ".erased_subjects_scratch"))
+    with open(
+        os.path.join(path, "._SWAP_PENDING_erased_subjects.json"), "w"
+    ) as fh:
+        json.dump(
+            {
+                "name": "erased_subjects",
+                "old": ".erased_subjects_old_torn",
+                "scratch": ".erased_subjects_scratch",
+            },
+            fh,
+        )
+    os.rename(led, os.path.join(path, ".erased_subjects_old_torn"))
+
+    # subject 0 re-enters through the manifest's adds door
+    pipeline.manifest_add_batch(spark, path, _docs(spark, [0]), 7)
+    st = pipeline.manifest_erase(spark, path, _docs(spark, [0]))
+    assert st["n_docs_erased"] == 1 and st["n_suppressed"] == 0
+    left = {r.doc_id for r in spark.read.parquet(led).collect()}
+    assert left == set(range(1, 6))

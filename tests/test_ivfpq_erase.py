@@ -192,6 +192,7 @@ def test_streaming_erase_then_compact_equals_batch_erase(
     changes nothing, and compaction folds identically to a one-shot
     batch erase of the union."""
     from development_of_a_real_time_data_pipeline_for_user_profile_analysis_spark.streaming.pipeline import (
+        drain,
         run_ivfpq_erase_stream,
     )
 
@@ -211,12 +212,10 @@ def test_streaming_erase_then_compact_equals_batch_erase(
         .option("maxFilesPerTrigger", 1)
         .parquet(in_dir)
     )
-    timings: list = []
-    q = run_ivfpq_erase_stream(
-        spark, stream, path, str(tmp_path / "ckpt"), timings=timings
-    )
-    assert q.awaitTermination(300)
-    assert len([t for t in timings if t[1] > 0]) >= 2  # real multi-batch
+    q = run_ivfpq_erase_stream(spark, stream, path, str(tmp_path / "ckpt"))
+    drain(q, "ivfpq-erase")
+    # real multi-batch
+    assert len([p for p in q.recentProgress if p["numInputRows"] > 0]) >= 2
 
     serving = similarity.read_ivfpq_index_serving(spark, path)["codes"]
     assert serving.filter(F.col("vec_id").isin(erase_ids)).count() == 0

@@ -20,6 +20,7 @@ from development_of_a_real_time_data_pipeline_for_user_profile_analysis_spark.so
     load_table,
 )
 from development_of_a_real_time_data_pipeline_for_user_profile_analysis_spark.streaming.pipeline import (
+    drain,
     run_ivfpq_add_stream,
 )
 
@@ -34,7 +35,8 @@ RES = similarity.IVFPQ_BATCH_RESIDUE
 def streamed_index(spark, sf_dir, tmp_path_factory):
     """Base index built from the train+standing slice; the held-out
     ingest residue streamed in as 3 micro-batches through
-    run_ivfpq_add_stream. Returns (index_path, timings)."""
+    run_ivfpq_add_stream. Returns (index_path, the query's
+    recentProgress)."""
     emb = load_table(spark, sf_dir, "embeddings")
     corpus = emb.filter(F.col("vec_id") % MOD != RES)
     batch = emb.filter(F.col("vec_id") % MOD == RES)
@@ -52,23 +54,22 @@ def streamed_index(spark, sf_dir, tmp_path_factory):
         .option("maxFilesPerTrigger", 1)
         .parquet(in_dir)
     )
-    timings: list = []
     q = run_ivfpq_add_stream(
         spark,
         stream,
         index_path,
         str(tmp_path_factory.mktemp("ivfpq_stream_ckpt")),
-        timings=timings,
     )
-    q.awaitTermination(300)
-    return index_path, timings
+    drain(q, "ivfpq-add")
+    return index_path, q.recentProgress
 
 
 def test_streamed_adds_equal_full_rebuild(spark, sf_dir, streamed_index):
     """base codes ∪ streamed segments == a from-scratch rebuild over
     corpus+batch, vector for vector — across >= 3 micro-batches."""
-    index_path, timings = streamed_index
-    assert len([t for t in timings if t[1] > 0]) >= 3  # real multi-batch soak
+    index_path, progress = streamed_index
+    # real multi-batch soak
+    assert len([p for p in progress if p["numInputRows"] > 0]) >= 3
 
     emb = load_table(spark, sf_dir, "embeddings")
     rebuilt = similarity.build_ivfpq_index(emb)["codes"]
@@ -104,7 +105,7 @@ def test_segment_publish_is_idempotent(spark, sf_dir, streamed_index):
     """Replaying a batch id overwrites its own segment (foreachBatch
     at-least-once safety): re-adding batch_id=0's rows leaves the
     code set unchanged."""
-    index_path, timings = streamed_index
+    index_path, _ = streamed_index
     import os
 
     seg0 = os.path.join(index_path, "codes_adds", "batch_id=0")

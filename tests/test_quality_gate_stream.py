@@ -18,6 +18,7 @@ from development_of_a_real_time_data_pipeline_for_user_profile_analysis_spark.so
     load_table,
 )
 from development_of_a_real_time_data_pipeline_for_user_profile_analysis_spark.streaming.pipeline import (
+    drain,
     run_quality_gate_stream,
 )
 
@@ -35,7 +36,6 @@ def gated(spark, sf_dir, tmp_path_factory):
     in_dir = str(tmp_path_factory.mktemp("qgate_in"))
     docs.repartition(3).write.mode("overwrite").parquet(in_dir)
     kept_dir = str(tmp_path_factory.mktemp("qgate_kept"))
-    timings: list = []
     q = run_quality_gate_stream(
         spark,
         spark.readStream.schema(DOC_SCHEMA)
@@ -45,17 +45,16 @@ def gated(spark, sf_dir, tmp_path_factory):
         threshold,
         kept_dir,
         str(tmp_path_factory.mktemp("qgate_ckpt")),
-        timings=timings,
     )
-    q.awaitTermination(300)
-    return docs, weights, threshold, kept_dir, timings
+    drain(q, "quality-gate")
+    return docs, weights, threshold, kept_dir, q.recentProgress
 
 
 def test_streamed_gate_equals_batch_gate(spark, gated):
     """Union of per-batch kept docs == the batch gate over the whole
     corpus (same frozen weights + threshold), across >= 3 batches."""
-    docs, weights, threshold, kept_dir, timings = gated
-    assert len([t for t in timings if t[1] > 0]) >= 3
+    docs, weights, threshold, kept_dir, progress = gated
+    assert len([p for p in progress if p["numInputRows"] > 0]) >= 3
     streamed = sorted(
         r["doc_id"]
         for r in spark.read.parquet(kept_dir).select("doc_id").collect()

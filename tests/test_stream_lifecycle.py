@@ -1,9 +1,10 @@
 """The registry's micro-batch stream lifecycle — stage → start → drain —
 is written once (plans/registry.py: _work_dir, _stage_batches,
 _stream_run; streaming/pipeline.py: start_gate, drain). These tests pin
-its contract: a timed-out drain never lets a partial sink through, staged
-relations replay as ordered micro-batches, and the stream queries leave
-no scratch dirs behind.
+its contract: a timed-out drain never lets a partial sink through, the
+micro-batch frame (nonempty_batch) skips empty batches and always
+unpersists, staged relations replay as ordered micro-batches, and the
+stream queries leave no scratch dirs behind.
 """
 
 from __future__ import annotations
@@ -18,6 +19,7 @@ from development_of_a_real_time_data_pipeline_for_user_profile_analysis_spark.pl
 )
 from development_of_a_real_time_data_pipeline_for_user_profile_analysis_spark.streaming.pipeline import (
     drain,
+    nonempty_batch,
     start_gate,
 )
 
@@ -56,6 +58,54 @@ def test_drain_leaves_a_finished_query_alone():
     q = _FakeQuery(terminated=True)
     drain(q, "pii-redact")
     assert not q.stopped
+
+
+class _FakeBatch:
+    def __init__(self, n_rows: int):
+        self.n_rows = n_rows
+        self.calls: list[str] = []
+
+    def persist(self):
+        self.calls.append("persist")
+        return self
+
+    def count(self):
+        self.calls.append("count")
+        return self.n_rows
+
+    def unpersist(self):
+        self.calls.append("unpersist")
+        return self
+
+
+def test_frame_skips_an_empty_batch_and_unpersists():
+    seen = []
+    batch = _FakeBatch(0)
+    nonempty_batch(lambda df, bid: seen.append(bid))(batch, 4)
+    assert seen == []
+    assert batch.calls == ["persist", "count", "unpersist"]
+
+
+def test_frame_unpersists_when_the_gate_raises():
+    def gate(df, bid):
+        raise RuntimeError("gate failed in batch 2")
+
+    batch = _FakeBatch(3)
+    with pytest.raises(RuntimeError, match="gate failed in batch 2"):
+        nonempty_batch(gate)(batch, 2)
+    assert batch.calls == ["persist", "count", "unpersist"]
+
+
+def test_frame_hands_a_nonempty_batch_to_the_gate_once():
+    seen = []
+    batch = _FakeBatch(5)
+
+    def gate(df, bid):
+        seen.append((df, bid, list(df.calls)))
+
+    nonempty_batch(gate)(batch, 9)
+    assert seen == [(batch, 9, ["persist", "count"])]
+    assert batch.calls == ["persist", "count", "unpersist"]
 
 
 def test_staged_batches_replay_in_order(spark, tmp_path):

@@ -10,6 +10,7 @@ import os
 
 import pytest
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from development_of_a_real_time_data_pipeline_for_user_profile_analysis_spark.schemas import (
     PROFILE_COLUMNS,
@@ -92,7 +93,6 @@ def test_streaming_dedup_drops_duplicate_ids(spark, stream_dirs):
     pipeline.drain(q, "dedup")
     out = spark.sql("SELECT id FROM dedup_out")
     assert out.count() == out.distinct().count()
-    batch_once = 50 - 1 - len([k for k in range(1, 51) if k % 101 == 0])  # k=? none <=50; minus none
     # 50 users, none with null uuid below 101; all adults in this range
     assert out.count() == 50
 
@@ -111,9 +111,20 @@ def test_streaming_windowed_registrations(spark, stream_dirs):
     )
     pipeline.drain(q, "windowed registrations")
     rows = spark.sql("SELECT * FROM reg_windows").collect()
-    assert sum(r.registrations for r in rows) > 0 or True  # append-mode emits closed windows only
-    # total registrations across windows must not exceed input users
-    assert sum(r.registrations for r in rows) <= 300
+    # append mode emits only the windows the watermark closed: those
+    # ending at or before the latest event time minus the 1-day delay
+    from development_of_a_real_time_data_pipeline_for_user_profile_analysis_spark.operators import etl
+
+    curated = etl.curate_profiles(
+        etl.parse_envelopes(spark.read.text(stream_dirs["src"]))
+    ).select(F.to_timestamp("inscription").alias("t"))
+    watermark = curated.agg(F.max("t")).collect()[0][0] - dt.timedelta(days=1)
+    closed = curated.groupBy(F.window("t", "30 days").alias("w")).count().filter(
+        F.col("w.end") <= F.lit(watermark)
+    )
+    expected = closed.agg(F.sum("count")).collect()[0][0]
+    assert 0 < expected < 300
+    assert sum(r.registrations for r in rows) == expected
 
 
 def test_streaming_session_window(spark, stream_dirs, tmp_path):
